@@ -26,6 +26,14 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 import math
 
@@ -54,11 +62,14 @@ def _stored_or_computed_cn(df: DataFrame) -> DataFrame:
     return df.withColumn("__cn", l2_norm(F.col("cv")))
 
 
-def _py_l2_norm(arr) -> float:
+def _py_l2_norm(arr) -> float | None:
     """Driver-side mirror of :func:`l2_norm` for literal vectors: the same
     left-assoc accumulate over IEEE doubles + correctly-rounded sqrt, so
     ``F.lit(_py_l2_norm(v))`` is bit-identical to evaluating the Spark
-    fold over ``F.array(*[F.lit(x) for x in v])``."""
+    fold over ``F.array(*[F.lit(x) for x in v])``.  A NULL vector or
+    element gives ``None``, as the fold gives NULL."""
+    if arr is None or None in arr:
+        return None
     acc = 0.0
     for x in arr:
         xd = float(x)
@@ -280,12 +291,14 @@ def multiprobe_buckets(
     the default radius 2).
 
     Single-expression convenience form — fine for ad-hoc composition, but
-    the serving paths instead stage the projection dots and home string
-    as their own columns and expand the ball with
-    :func:`_probe_keys_from_home`: building every key straight from the
-    vector repeats the projection subtree per key reference, and the
-    per-key sign-test form exceeds Janino's 64 KB codegen method limit
-    under ANSI (r14).
+    :func:`lsh_topk` and :func:`lsh_topk_from_index_join` instead stage
+    the projection dots and home string as their own columns and expand
+    the ball with :func:`_probe_keys_from_home`: building every key
+    straight from the vector repeats the projection subtree per key
+    reference, and the per-key sign-test form exceeds Janino's 64 KB
+    codegen method limit under ANSI (r14).  The index probes
+    (:func:`lsh_topk_from_index`, ``_by_id``) build no key expressions at
+    all: the driver expands the ball with :func:`_hamming_ball`.
 
     Multi-probe is what makes a SINGLE sign-LSH table usable as an index:
     a true neighbour at cosine ~0.35 agrees with the query on each
@@ -341,7 +354,9 @@ def _probe_keys_from_home(home: Column, nbits: int, radius: int) -> Column:
     key, keeping the whole probe fan-out inside whole-stage codegen.
     The caller must stage ``home`` as its own projection (a withColumn
     before the explode) — it is non-cheap, so CollapseProject will not
-    re-inline it into every key."""
+    re-inline it into every key.  Its callers are :func:`lsh_topk` and
+    :func:`lsh_topk_from_index_join`; the other index probes expand the
+    ball on the driver (:func:`_hamming_ball`)."""
     import itertools
 
     def flip_at(i: int) -> Column:  # 1-indexed char position
@@ -607,69 +622,110 @@ def lsh_topk_from_index(
 
     Identical results to the in-memory :func:`lsh_topk` at the same
     ``radius`` (the ann_lsh_indexed driver row certifies it by sharing the
-    oracle): the query side computes its projections and Hamming-``radius``
-    probe keys, and the DISTINCT probe keys reach the index scan as a
-    partition filter — bounded by ``min(|queries| × probes, 2^nbits)``
-    literals, ≤ 256 at the default ``nbits=8``, so the driver round-trip
-    is constant-sized (a cluster-scale query batch would join on the
-    partition column and lean on dynamic partition pruning instead, the
-    :func:`ivf_topk_from_index_join` pattern).
+    oracle).  One collect fetches the query rows; the driver projects each
+    one onto the hyperplanes with the same left fold as :func:`_plane_dot`,
+    so every sign bit matches the Spark expression, and
+    :func:`_score_staged` serves the batch.  The probe keys reach the
+    index scan as a literal partition filter, bounded by ``2^nbits``
+    whatever the batch size (a cluster-scale batch takes
+    :func:`lsh_topk_from_index_join` instead).
     """
-    staged = (
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-        )
-        .withColumn("_dots", projection_dots(F.col("qv"), dim, nbits, seed))
-        .withColumn("_home", _home_from_dots(F.col("_dots"), nbits))
+    qf = queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
     )
-    if radius <= 0:
-        probed = staged.select(
-            "query_id",
-            "qv",
-            F.concat(F.lit("b"), F.col("_home")).alias("pbucket"),
-        )
-    else:
-        # explode first, prefix after — a generator cannot nest inside
-        # another expression
-        probed = staged.select(
-            "query_id",
-            "qv",
-            F.explode(
-                _probe_keys_from_home(F.col("_home"), nbits, radius)
-            ).alias("_k"),
-        ).select(
-            "query_id",
-            "qv",
-            F.concat(F.lit("b"), F.col("_k")).alias("pbucket"),
-        )
-    # Stage the probe frame once (ADVICE r8 #3: the projection subplan used
-    # to run twice — once for the distinct-key collect, once in the join);
-    # it is query-batch-sized, so the materialization is trivial.
-    probed = probed.localCheckpoint(eager=True)
-    probe_keys = sorted(
-        {r["pbucket"] for r in probed.select("pbucket").distinct().collect()}
+    planes = lsh_hyperplanes(dim, nbits, seed)
+    qrows = [
+        (r["query_id"], r["qv"], _py_home_bits(r["qv"], planes))
+        for r in qf.collect()
+    ]
+    return _score_staged(
+        spark, index_path, qrows, qf.schema["query_id"].dataType, k, radius
+    )
+
+
+def _py_home_bits(vec, planes: list[list[float]]) -> str:
+    """Driver-side mirror of ``_home_from_dots(projection_dots(vec))``:
+    each dot folds left to right from ``0.0`` like :func:`_plane_dot`, a
+    NULL vector, a NULL element or a length mismatch (``zip_with`` pads
+    with NULL) gives a NULL dot and so a ``0`` bit, and ``NaN >= 0`` holds
+    because Spark orders NaN above every double."""
+    bits = []
+    for plane in planes:
+        if vec is None or None in vec or len(vec) != len(plane):
+            bits.append("0")
+            continue
+        dot = 0.0
+        for x, w in zip(vec, plane):
+            dot += float(x) * w
+        bits.append("0" if dot < 0 else "1")
+    return "".join(bits)
+
+
+# Scores staged query rows against the pruned index: one plan, analyzed
+# once.  The cosine is the dot_product / (l2_norm * l2_norm) fold of
+# cosine_similarity written as SQL, so it is bit-identical to lsh_topk.
+# ``str.format`` fills the literals; the doubled braces survive it as the
+# ``{q}``/``{idx}`` frame references that ``spark.sql`` binds.
+_PROBE_SQL = """
+SELECT query_id, neighbor_id, cosine, rank FROM (
+  SELECT query_id, neighbor_id, cosine, row_number() OVER (
+      PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
+  FROM (
+    SELECT /*+ BROADCAST(q) */ q.query_id, i.neighbor_id,
+      aggregate(zip_with(q.qv, i.cv, (x, y) -> x * y), 0D, (a, t) -> a + t)
+        / (q.qn * {cn}) AS cosine
+    FROM (SELECT query_id, qv, qn, explode(pbuckets) AS pbucket FROM {{q}}) q
+    JOIN {{idx}} i ON q.pbucket = i.pbucket
+    WHERE i.pbucket IN ({keys}) AND q.query_id <> i.neighbor_id))
+WHERE rank <= {k}
+"""
+_L2_NORM_SQL = "sqrt(aggregate(i.cv, 0D, (a, x) -> a + x * x))"
+
+
+def _score_staged(
+    spark, index_path: str, qrows: list, id_type, k: int, radius: int
+) -> DataFrame:
+    """The scoring core of both index probes.  ``qrows`` holds one
+    ``(query_id, vector, home_bits)`` tuple per query row; the driver
+    expands each home bucket into its Hamming-``radius`` ball
+    (:func:`_hamming_ball`) and folds the query norm (:func:`_py_l2_norm`),
+    and the rows go back to Spark as an Arrow table, which plans as a
+    ``LocalRelation``: no Python worker and no job to stage them.  Rows
+    are kept as given, so a duplicated query id probes once per row, as a
+    join over the query frame would."""
+    import pyarrow as pa
+
+    balls = []
+    for _, _, home in qrows:
+        if home.strip("01"):
+            raise ValueError(f"malformed LSH bucket {home!r} in {index_path}")
+        balls.append(["b" + key for key in _hamming_ball(home, radius)])
+    schema = StructType([
+        StructField("query_id", id_type),
+        StructField("qv", ArrayType(DoubleType())),
+        StructField("qn", DoubleType()),
+        StructField("pbuckets", ArrayType(StringType())),
+    ])
+    staged = spark.createDataFrame(
+        pa.table({
+            "query_id": [r[0] for r in qrows],
+            "qv": pa.array([r[1] for r in qrows], pa.list_(pa.float64())),
+            "qn": pa.array([_py_l2_norm(r[1]) for r in qrows], pa.float64()),
+            "pbuckets": balls,
+        }),
+        schema,
     )
     idx, _ = _lsh_index_frames(spark, index_path)
-    lists = _stored_or_computed_cn(
-        idx.filter(F.col("pbucket").isin(probe_keys))
+    keys = sorted({key for ball in balls for key in ball})
+    text = _PROBE_SQL.format(
+        # a NULL stored norm (pre-cn base under a v2 schema) falls back to
+        # the fold instead of poisoning the cosine (_stored_or_computed_cn)
+        cn=f"coalesce(i.cn, {_L2_NORM_SQL})" if "cn" in idx.columns
+        else _L2_NORM_SQL,
+        keys=", ".join(f"'{key}'" for key in keys) or "NULL",
+        k=int(k),
     )
-    probed = probed.withColumn("__qn", l2_norm(F.col("qv")))
-    sim = dot_product(F.col("qv"), F.col("cv")) / (
-        F.col("__qn") * F.col("__cn")
-    )
-    scored = (
-        F.broadcast(probed)
-        .join(lists, "pbucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return spark.sql(text, q=staged, idx=idx)
 
 
 def lsh_topk_from_index_join(
@@ -706,8 +762,8 @@ def lsh_topk_from_index_join(
     corpus ≈ 50k vectors): at 20 queries the collect path wins (1.7 s vs
     1.9 s — the literal filter is planned once, no join exchange); at
     2 000 queries the join path wins decisively (30.8 s vs 49.4 s — the
-    collect variant re-materializes the probe frame driver-side and its
-    literal filter stops pruning once most buckets are probed).  Rule of
+    collect variant, as it then was, re-materialized the probe frame, and
+    its literal filter stops pruning once most buckets are probed).  Rule of
     thumb: member/driver-sized batches → :func:`lsh_topk_from_index` /
     ``_by_id``; corpus-joined batches → this function.
     """
@@ -891,8 +947,9 @@ def lsh_topk_from_index_auto(
     computes its upstream once; the probe is bounded in ROWS RETURNED,
     not upstream work); when the switch point EXCEEDS the cap (a tiny
     index), no probe job runs at all (VERDICT r15 ask #2) because the
-    collect path wins at every admissible batch size — then picks :func:`lsh_topk_from_index` (driver-collected probe keys as a
-    literal partition filter; wins for member/driver-sized batches and
+    collect path wins at every admissible batch size — then picks
+    :func:`lsh_topk_from_index` (queries staged on the driver, probe keys
+    as a literal partition filter; wins for member/driver-sized batches and
     for ANY batch against a small index, where the whole scan is cheaper
     than the join's fixed DPP overhead) or
     :func:`lsh_topk_from_index_join` (DPP equi-join, no driver collect;
@@ -987,19 +1044,12 @@ def _hamming_ball(bits: str, radius: int) -> list[str]:
     :func:`_probe_keys_from_dots`)."""
     import itertools
 
-    nbits = len(bits)
-    masks: list[tuple[int, ...]] = [()]
-    for r in range(1, radius + 1):
-        masks += list(itertools.combinations(range(nbits), r))
-    out = []
-    for m in masks:
-        out.append(
-            "".join(
-                ("0" if bits[j] == "1" else "1") if j in m else bits[j]
-                for j in range(nbits)
-            )
-        )
-    return out
+    flip = {"0": "1", "1": "0"}
+    return [
+        "".join(flip[c] if j in m else c for j, c in enumerate(bits))
+        for r in range(max(radius, 0) + 1)
+        for m in itertools.combinations(range(len(bits)), r)
+    ]
 
 
 # Reader handles for persisted LSH indexes, keyed by (appId, path): the
@@ -1096,84 +1146,29 @@ def lsh_topk_from_index_by_id(
 ) -> DataFrame:
     """Probe a persisted sign-LSH index for IN-CORPUS queries, addressed
     by id: the query's home bucket is READ BACK from the index instead of
-    re-projected, so the serving path never touches the hyperplane
-    literals at all — this is what makes the persisted index an
-    amortization rather than a cache (r7 verdict ask #4: the 8×dim
-    projection expressions cost ~1.8 s of Catalyst analysis PER CALL when
-    rebuilt inline; a stored-hash lookup is how a real vector store serves
+    re-projected, so the serving path never touches the hyperplanes at
+    all — this is what makes the persisted index an amortization rather
+    than a cache (a stored-hash lookup is how a real vector store serves
     members).
 
-    One small collect fetches the query rows (ids, vectors, home
-    buckets); the Hamming-``radius`` probe keys expand DRIVER-SIDE from
-    the stored bucket strings (``|queries| × probes`` keys, bounded by
-    2^nbits distinct), reach the scan as a partition filter, and one
-    pruned bucket equi-join scores the candidates.  Out-of-corpus query
+    One pruned collect over the id sidecar fetches the query rows (ids,
+    vectors, home buckets) and :func:`_score_staged` serves them, the
+    same core as :func:`lsh_topk_from_index`.  Out-of-corpus query
     vectors take :func:`lsh_topk_from_index`, which projects them.
     """
-    idx, byid = _lsh_index_frames(spark, index_path)
-    # The query rows are collected anyway, so the duplicate-id defense
-    # (a violated append contract would emit duplicate probe rows —
-    # ADVICE r8 #2) runs DRIVER-SIDE on the collected handful instead of
-    # as a dropDuplicates shuffle: one job of pruned scan tasks replaces
-    # the r16 shape's two jobs + exchange (guide §7.3 — measured 2 jobs /
-    # 0.33 s → 1 job).  Keep-first over the collected rows implements the
-    # same "arbitrary survivor" semantics; under the contract there are
-    # no duplicates and both forms are the identity.
-    raw_qrows = (
-        byid.filter(F.col("neighbor_id").isin(list(query_ids)))
-        .select(
-            F.col("neighbor_id").alias("query_id"),
-            "cv",
-            F.col("pbucket").cast("string").alias("home"),
-        )
-        .collect()
-    )
-    seen: set = set()
-    qrows = []
-    for r in raw_qrows:
-        if r["query_id"] not in seen:
-            seen.add(r["query_id"])
-            qrows.append(r)
-    probed_rows = [
-        (r["query_id"], list(r["cv"]), "b" + key)
-        for r in qrows
-        for key in _hamming_ball(r["home"][1:], radius)
-    ]
-    probe_keys = sorted({p for _, _, p in probed_rows})
-    # One slice: createDataFrame parallelizes over the session default
-    # (one slice per core), so the broadcast build of this
-    # |queries|×probes-row frame was a 32-task job for tens of rows —
-    # one narrow task moves the same bytes (guide §7.3; the frame is
-    # bounded by design, |queries| × ≤2^nbits rows).  numSlices=1 at
-    # parallelize time, NOT .coalesce(1): a coalesce over the 32-slice
-    # parallelized RDD still iterates every parent slice through the
-    # Python runner inside one task and measured a flat ~5 s per
-    # broadcast build — the A/B that caught it is in
-    # OPTIMIZATION_r17.md §1.
-    probed = spark.createDataFrame(
-        spark.sparkContext.parallelize(probed_rows, 1),
-        schema="query_id long, qv array<double>, pbucket string",
-    )
-    lists = _stored_or_computed_cn(
-        idx.filter(F.col("pbucket").isin(probe_keys))
-    )
-    probed = probed.withColumn("__qn", l2_norm(F.col("qv")))
-    sim = dot_product(F.col("qv"), F.col("cv")) / (
-        F.col("__qn") * F.col("__cn")
-    )
-    scored = (
-        F.broadcast(probed)
-        .join(lists, "pbucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    _, byid = _lsh_index_frames(spark, index_path)
+    # An id appended twice violates the append contract (write_lsh_index)
+    # and would duplicate its probe rows; keep the first collected row so
+    # such an id still gets unique, dense ranks.  Under the contract this
+    # is the identity.
+    qrows, seen = [], set()
+    for r in byid.filter(F.col("neighbor_id").isin(list(query_ids))).select(
+        "neighbor_id", "cv", "pbucket"
+    ).collect():
+        if r[0] not in seen:
+            seen.add(r[0])
+            qrows.append((r[0], r[1], r[2][1:]))
+    return _score_staged(spark, index_path, qrows, LongType(), k, radius)
 
 
 def write_ivf_index(

@@ -15,9 +15,12 @@ table compiles once into Catalyst expressions:
   maps (to_codes.py:287-290)
 - alert / disregard → boolean columns (to_codes.py:292-309)
 
-At 100 TB this matters: a 600-rule codes file becomes one wide projection
-inside a single WholeStageCodegen span — no shuffle, no Python, no per-rule
-pass over the data.
+At 100 TB this matters: a 600-rule codes file becomes one wide projection —
+no shuffle, no Python, no per-rule pass over the data.  It is NOT one
+whole-stage-codegen span at every size: the generated ``processNext`` must
+fit Janino's 64 KB method limit, and a codes file of ~125 case rules already
+exceeds it ("Code grows beyond 64 KB"), so Spark logs the failed compile and
+runs that stage's projection interpreted (``spark.sql.codegen.fallback``).
 """
 
 from __future__ import annotations

@@ -882,8 +882,14 @@ def test_star_contraction_stats_hook(spark):
     # O(log n) alternation rounds, NOT O(diameter)
     assert 1 <= stats["iterations"] <= 2 * int(math.log2(n)) + 2
     for r in stats["rounds"]:
-        assert set(r) == {"sec", "probe_sec", "edges"}
+        assert set(r) == {"sec", "probe_sec", "edges", "jobs"}
         assert r["edges"] >= 0 and r["sec"] >= 0
+        # the round's Spark jobs: ids and per-stage task counts
+        for job in r["jobs"]:
+            assert isinstance(job["job"], int) and job["job"] >= 0
+            for st in job["stages"]:
+                assert isinstance(st["stage"], int) and st["stage"] >= 0
+                assert isinstance(st["tasks"], int) and st["tasks"] >= 0
     # stats=None (the production path) is unaffected
     plain = {
         (r.node, r.component)

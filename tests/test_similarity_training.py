@@ -430,13 +430,21 @@ def test_pq_trained_codebooks_beat_fixture(spark):
     assert d_tr < 0.9 * d_fix, (d_tr, d_fix)
 
 
+def _probe_rows(df):
+    return sorted(
+        (r["query_id"], r["rank"], r["neighbor_id"], r["cosine"])
+        for r in df.collect()
+    )
+
+
 def test_persisted_lsh_index_by_id_matches_memory(spark, tmp_path):
-    """write_lsh_index + lsh_topk_from_index_by_id (r7 verdict ask #4):
-    the stored-bucket serving path must (a) reach the bucket table scan as
-    a partition filter and (b) return exactly what the in-memory lsh_topk
-    returns, at both the radius-0 and multiprobe operating points."""
+    """write_lsh_index + both index probes (r7 verdict ask #4): each must
+    (a) reach the bucket table scan as a partition filter and (b) return
+    exactly what the in-memory lsh_topk returns at the same radius — the
+    same neighbours and ranks, and bit-identical cosines."""
     from meerkat_abacus_spark.datapipe.similarity import (
         lsh_topk,
+        lsh_topk_from_index,
         lsh_topk_from_index_by_id,
         write_lsh_index,
     )
@@ -444,27 +452,27 @@ def test_persisted_lsh_index_by_id_matches_memory(spark, tmp_path):
     corpus = _clustered_corpus(spark).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    queries = corpus.filter(F.col("vec_id").isin([0, 45, 90]))
+    ids = [0, 7, 45, 61, 90, 119]
+    queries = corpus.filter(F.col("vec_id").isin(ids))
     path = str(tmp_path / "lsh")
     write_lsh_index(corpus, path, dim=4, nbits=4)
 
-    for radius in (0, 2):
-        probed = lsh_topk_from_index_by_id(
-            spark, path, [0, 45, 90], k=3, nbits=4, radius=radius
+    for radius in (0, 1, 2):
+        mem = _probe_rows(
+            lsh_topk(corpus, queries, dim=4, k=3, nbits=4, radius=radius)
         )
-        plan = probed._jdf.queryExecution().executedPlan().toString()
-        assert "PartitionFilters" in plan and "pbucket" in plan, plan
-        mem = {
-            (r["query_id"], r["rank"]): (r["neighbor_id"], round(r["cosine"], 9))
-            for r in lsh_topk(
-                corpus, queries, dim=4, k=3, nbits=4, radius=radius
-            ).collect()
-        }
-        idx = {
-            (r["query_id"], r["rank"]): (r["neighbor_id"], round(r["cosine"], 9))
-            for r in probed.collect()
-        }
-        assert mem == idx, f"radius={radius}"
+        assert mem, radius
+        for probed in (
+            lsh_topk_from_index_by_id(
+                spark, path, ids, k=3, nbits=4, radius=radius
+            ),
+            lsh_topk_from_index(
+                spark, path, queries, dim=4, k=3, nbits=4, radius=radius
+            ),
+        ):
+            plan = probed._jdf.queryExecution().executedPlan().toString()
+            assert "PartitionFilters" in plan and "pbucket" in plan, plan
+            assert _probe_rows(probed) == mem, f"radius={radius}"
 
 
 def test_lsh_index_rewrite_invalidates_reader_cache(spark, tmp_path):
@@ -600,6 +608,142 @@ def test_lsh_append_equals_rebuild(spark, tmp_path):
         }
 
     assert probe_by_vec(inc) == probe_by_vec(full)
+
+
+def test_driver_home_bits_equal_spark_sign_bucket(spark):
+    """The vector probe projects its queries on the driver; every bit
+    must match sign_lsh_bucket's Spark fold, including rounding-sensitive
+    sums, exact zeros, NaN, infinities, NULLs and wrong-length vectors."""
+    import random
+
+    from meerkat_abacus_spark.datapipe.similarity import (
+        _py_home_bits,
+        lsh_hyperplanes,
+        sign_lsh_bucket,
+    )
+
+    dim, nbits = 8, 6
+    planes = lsh_hyperplanes(dim, nbits)
+    rng = random.Random(7)
+    vecs = [[rng.gauss(0, 1) for _ in range(dim)] for _ in range(100)]
+    # magnitudes 1e-8..1e16 side by side: the sum depends on fold order
+    vecs += [
+        [rng.choice((-1, 1)) * 10.0 ** rng.randint(-8, 16) for _ in range(dim)]
+        for _ in range(100)
+    ]
+    w = planes[0]
+    vecs += [
+        [w[1], -w[0]] + [0.0] * (dim - 2),  # dot with plane 0 is exactly 0
+        [0.0] * dim,
+        [-0.0] * dim,
+        [float("nan")] + [1.0] * (dim - 1),
+        [float("inf")] + [0.0] * (dim - 1),
+        [1.0, None] + [0.0] * (dim - 2),
+        [1.0] * (dim - 1),
+        [1.0] * (dim + 1),
+        None,
+    ]
+    rows = list(enumerate(vecs))
+    df = spark.createDataFrame(rows, "id int, v array<double>")
+    spark_bits = {
+        r["id"]: r["b"]
+        for r in df.select(
+            "id", sign_lsh_bucket(F.col("v"), dim, nbits).alias("b")
+        ).collect()
+    }
+    assert {i: _py_home_bits(v, planes) for i, v in rows} == spark_bits
+
+
+def test_lsh_index_probe_edge_cases_pinned(spark, tmp_path):
+    """What the index probes returned before they staged their queries
+    on the driver, pinned: an empty batch, a duplicated query id, a query
+    whose vector is NULL or holds a NULL element, and ids the index does
+    not hold."""
+    from meerkat_abacus_spark.datapipe.similarity import (
+        lsh_topk_from_index,
+        lsh_topk_from_index_by_id,
+        write_lsh_index,
+    )
+
+    corpus = _clustered_corpus(spark)
+    path = str(tmp_path / "lsh")
+    write_lsh_index(corpus, path, dim=4, nbits=4)
+    vec = {r["vec_id"]: r["embedding"] for r in corpus.collect()}
+
+    def probe(rows, radius):
+        q = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
+        return [
+            (qid, rank, nid, None if cos is None else round(cos, 9))
+            for qid, rank, nid, cos in _probe_rows(
+                lsh_topk_from_index(
+                    spark, path, q, dim=4, k=3, nbits=4, radius=radius
+                )
+            )
+        ]
+
+    q45 = [(45, 1, 40, 1.0), (45, 2, 50, 1.0), (45, 3, 55, 1.0)]
+    for radius in (0, 2):
+        assert probe([], radius) == []
+        # a repeated query row probes once per row, so each of its
+        # candidates appears twice in its ranking
+        assert probe([(0, vec[0]), (0, vec[0]), (45, vec[45])], radius) == [
+            (0, 1, 5, 1.0), (0, 2, 5, 1.0), (0, 3, 10, 1.0),
+        ] + q45
+    for bad in (None, [1.0, None, 0.0, 0.0]):
+        # NULL projections give home bucket 0000, which is empty here;
+        # its neighbours score a NULL cosine and rank by neighbour id
+        assert probe([(7, bad), (45, vec[45])], 0) == q45
+        assert probe([(7, bad), (45, vec[45])], 2) == [
+            (7, 1, 0, None), (7, 2, 2, None), (7, 3, 4, None),
+        ] + q45
+
+    def by_id(ids):
+        return [
+            (qid, rank, nid, round(cos, 9))
+            for qid, rank, nid, cos in _probe_rows(
+                lsh_topk_from_index_by_id(spark, path, ids, k=3, nbits=4)
+            )
+        ]
+
+    q0 = [(0, 1, 5, 1.0), (0, 2, 10, 1.0), (0, 3, 15, 1.0)]
+    assert by_id([]) == []
+    assert by_id([0, 0, 45]) == q0 + q45
+    assert by_id([0, 10_000]) == q0
+
+
+def test_lsh_index_probes_run_four_jobs_without_python(spark, tmp_path):
+    """One probe batch is at most four Spark jobs (query collect,
+    broadcast of the staged queries, the scoring stage, the ranking
+    stage), and its plan stages the queries as a LocalTableScan: no
+    Python RDD or Python-evaluated operator, so no Python worker."""
+    from meerkat_abacus_spark.datapipe.similarity import (
+        lsh_topk_from_index,
+        lsh_topk_from_index_by_id,
+        write_lsh_index,
+    )
+
+    corpus = _clustered_corpus(spark)
+    path = str(tmp_path / "lsh")
+    write_lsh_index(corpus, path, dim=4, nbits=4)
+    queries = corpus.filter(F.col("vec_id").isin([0, 45, 90]))
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    probes = {
+        "vector": lambda: lsh_topk_from_index(
+            spark, path, queries, dim=4, k=3, nbits=4
+        ),
+        "by_id": lambda: lsh_topk_from_index_by_id(
+            spark, path, [0, 45, 90], k=3, nbits=4
+        ),
+    }
+    for name, probe in probes.items():
+        job0 = int(dag.nextJobId())
+        df = probe()
+        assert len(df.collect()) == 9, name
+        assert int(dag.nextJobId()) - job0 <= 4, name
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan, (name, plan)
+        for python_node in ("ExistingRDD", "Python", "Pandas", "InArrow"):
+            assert python_node not in plan, (name, python_node, plan)
 
 
 def test_lsh_index_rejects_unknown_mode(spark, tmp_path):
@@ -1199,7 +1343,7 @@ def test_block_cap_sample_policy_deterministic_subset(spark):
 
 def test_probe_keys_from_home_equals_from_dots(spark):
     """The substring-surgery probe-key form (_probe_keys_from_home — the
-    one the serving paths now stage, because the per-key sign-test form
+    one lsh_topk and the join probe stage, because the per-key sign-test form
     blows Janino's 64 KB method limit under ANSI and drops the Generate
     node to interpreted execution) must emit EXACTLY the keys of the
     original _probe_keys_from_dots, in the same order, for every radius

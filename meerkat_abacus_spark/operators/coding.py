@@ -1,26 +1,30 @@
-"""The coding engine: config rules → one compiled CASE-WHEN projection.
+"""The coding engine: config rules → two compiled projections.
 
 Reference: meerkat_abacus/codes/variable.py (the 6-primitive boolean DSL) and
 meerkat_abacus/codes/to_codes.py (group/priority/category/alert semantics).
 The reference interprets each rule per row in Python; here the whole rule
-table compiles once into Catalyst expressions:
+table compiles once into Catalyst expressions, in two stacked projections:
 
-- each rule        → a boolean ``test`` Column + a ``value`` Column
-- calculation_group → a single ``coalesce(when(t1,v1), when(t2,v2), …)`` —
-  CASE WHEN gives the reference's first-match-wins for free
-  (to_codes.py:197-213, 305-306)
-- calculation_priority → the same CASE WHEN with arms ordered by priority
-  (to_codes.py:260-281: lowest priority number wins)
-- categories       → ``map_concat`` of per-category conditional singleton
-  maps (to_codes.py:287-290)
-- alert / disregard → boolean columns (to_codes.py:292-309)
+- lower: each rule's test → one boolean helper column ``__t<i>``, so every
+  test is evaluated exactly once per row
+- upper, from those booleans:
+  - calculation_group → one ``CASE WHEN t1 THEN (id1, v1) WHEN t2 …`` entry:
+    first match wins (to_codes.py:197-213, 305-306); with
+    calculation_priority the arms are ordered by priority (:260-281)
+  - variables / categories → one map each, built from a NULL-filtered
+    entry array (to_codes.py:250-290)
+  - alert / alert_reason / disregard → boolean/string columns (:292-309)
+- the helper columns are dropped.
 
-At 100 TB this matters: a 600-rule codes file becomes one wide projection —
-no shuffle, no Python, no per-rule pass over the data.  It is NOT one
-whole-stage-codegen span at every size: the generated ``processNext`` must
-fit Janino's 64 KB method limit, and a codes file of ~125 case rules already
-exceeds it ("Code grows beyond 64 KB"), so Spark logs the failed compile and
-runs that stage's projection interpreted (``spark.sql.codegen.fallback``).
+No shuffle, no Python, no per-rule pass over the data.  A test is never
+re-inlined into the winner, value, category and alert expressions.  At a
+codes-file size (100+ rules) both projections run outside the whole-stage
+codegen span: the lower one has more output columns than
+``spark.sql.codegen.maxFields`` and the upper one holds the ``filter``
+lambda.  Spark compiles each as its own projection, split into methods, so
+no generated method reaches Janino's 64 KB limit and no failed compile is
+retried per execution (``tests/test_coding.py`` codes such a file with
+``spark.sql.codegen.fallback=false``).
 """
 
 from __future__ import annotations
@@ -46,10 +50,10 @@ _PRIMITIVES = ("match", "sub_match", "between", "value", "not_null", "calc")
 # coding query paid ~1000-1600 of them PER PLAN BUILD (measured: 0.3-0.7 s
 # of pure driver latency on pipeline_composed / coding_variables /
 # alert-family builds).  The compiler now assembles ONE SQL string per
-# output column — pure Python string work, zero round-trips — and parses
-# each with a single F.expr.  Every helper mirrors its former Column
-# construction expression-for-expression (same casts, same NULL handling,
-# same operator precedence), so the analyzed plan is unchanged; the
+# test and output column — pure Python string work — and Spark parses the
+# tests in one selectExpr and each output with a single F.expr.  Every
+# helper mirrors its former Column construction expression-for-expression
+# (same casts, same NULL handling, same operator precedence); the
 # reference-port property suite (tests/test_coding_dsl_property.py) and
 # the 12 coding oracle queries pin the behavior.
 
@@ -323,15 +327,6 @@ def compile_rule_test(
     return F.expr(passed), F.expr(value)
 
 
-@dataclass
-class CodedOutput:
-    variables: Column
-    categories: Column
-    alert: Column
-    alert_reason: Column
-    disregard: Column
-
-
 def _compile_entry(
     m: Rule,
     epi_config: str | dict,
@@ -380,32 +375,35 @@ def _compile_entry(
 _EMPTY_MAP = "CAST(map() AS MAP<STRING,STRING>)"
 
 
-def _sparse_map(
-    pairs: "list[tuple[str, str]]", guard_on: str = "key"
-) -> str:
-    """MAP<STRING,STRING> SQL from (key, value) expression pairs where
-    entries with a NULL key (``guard_on="key"``) or NULL value
-    (``guard_on="value"``) are dropped.
+def _entry(key: str, value: str) -> str:
+    """One map entry: a (k, v) struct of SQL expressions."""
+    return f"named_struct('k', {key}, 'v', CAST({value} AS STRING))"
 
-    Built as ``map_concat`` of per-entry conditional singleton maps rather
-    than ``map_from_entries(filter(array(...)))``: higher-order functions
-    (filter) are interpreted per element outside whole-stage codegen, and
-    the coding projection sits on every row of every form — the map build
-    IS the hot loop.  map_concat/create_map stay inside codegen (~25%
-    faster on the flagship shape).  Entry order (and therefore duplicate-
-    key behavior under spark.sql.mapKeyDedupPolicy) is identical."""
-    if not pairs:
+
+def _case(arms: "list[tuple[str, str]]") -> str:
+    """``CASE WHEN c1 THEN r1 WHEN c2 THEN r2 … END``: first TRUE arm wins,
+    NULL when none does."""
+    return "CASE {} END".format(" ".join(f"WHEN {c} THEN {r}" for c, r in arms))
+
+
+def _sparse_map(entries: "list[str]") -> str:
+    """NOT NULL MAP<STRING,STRING> SQL from entry expressions, each an
+    :func:`_entry` struct or NULL (dropped).
+
+    One ``map_from_entries`` over the NULL-filtered entry array per row,
+    not one conditional singleton map per entry inside a ``map_concat``.
+    The filter is a lambda that Spark interprets per element, yet it
+    measured faster: coding perfbench's Visit forms (37 rules, 47k rows,
+    warm, 4 local cores) took 1.9 CPU-s this way and 3.0 CPU-s with the
+    same entries in one ``map_concat``.  Entries keep their order, and
+    duplicate keys follow ``spark.sql.mapKeyDedupPolicy`` exactly as in
+    ``map_concat``.  The coalesce keeps the column NOT NULL, as the written
+    parquet schema expects."""
+    if not entries:
         return _EMPTY_MAP
-    maps = []
-    for k, v in pairs:
-        guard = k if guard_on == "key" else v
-        maps.append(
-            f"CASE WHEN ({guard}) IS NOT NULL THEN "
-            f"map({k}, CAST({v} AS STRING)) ELSE {_EMPTY_MAP} END"
-        )
-    if len(maps) == 1:
-        return maps[0]
-    return "map_concat({})".format(", ".join(maps))
+    return (
+        "coalesce(map_from_entries(filter(array({}), e -> e IS NOT NULL)), {})"
+    ).format(", ".join(entries), _EMPTY_MAP)
 
 
 def compile_rules_sql(
@@ -413,67 +411,62 @@ def compile_rules_sql(
     epi_config: str | dict = "international",
     link_structs: dict[str, str] | None = None,
     alert_data: dict[str, str] | None = None,
+    extra_variables: dict[str, str] | None = None,
     available: set[str] | None = None,
     types: dict[str, str] | None = None,
-) -> dict[str, str]:
-    """Compile a rule table into the five output SQL expressions of the
-    coding step (keys: variables/categories/alert/alert_reason/disregard).
+) -> tuple[dict[str, str], dict[str, str]]:
+    """Compile a rule table into the coding step's two projections.
 
-    variables  MAP<STRING,STRING>: var_id → stored value (to_codes.py:250-285)
+    Returns ``(tests, outputs)``.  ``tests`` is the lower projection: helper
+    column ``__t<i>`` → rule i's boolean test.  ``outputs`` is the upper
+    projection, SQL over those helper columns and the form's own:
+
+    variables  MAP<STRING,STRING>: var_id → stored value (to_codes.py:250-285),
+               then the alert_data and ``extra_variables`` entries
     categories MAP<STRING,STRING>: category → winning var_id (:287-290)
     alert/alert_reason/disregard: to_codes.py:292-309.
     """
+    tests: dict[str, str] = {}
     # Group rules; None group = the rule's own id (every ungrouped rule is its
     # own group — to_codes.py builds groups the same way).
-    groups: dict[str, list[Rule]] = {}
-    for r in rules:
-        groups.setdefault(r.calculation_group or r.id, []).append(r)
+    groups: dict[str, list[tuple[Rule, str, str]]] = {}
+    for i, r in enumerate(rules):
+        passed, value = _compile_entry(
+            r, epi_config, link_structs, available, types
+        )
+        tests[f"__t{i}"] = passed
+        groups.setdefault(r.calculation_group or r.id, []).append(
+            (r, _qid(f"__t{i}"), value)
+        )
 
-    var_entries: list[tuple[str, str]] = []
-    cat_arms: dict[str, list[str]] = {}
+    var_entries: list[str] = []
+    cat_arms: dict[str, list[tuple[str, str]]] = {}
     alert_arms: list[str] = []
-    alert_reason_arms: list[str] = []
+    alert_reason_arms: list[tuple[str, str]] = []
     disregard_arms: list[str] = []
 
-    for gid, members in groups.items():
-        # Compile each member once, in codes-file order.
-        compiled = [
-            (m, *_compile_entry(m, epi_config, link_structs, available, types))
-            for m in members
-        ]
+    for members in groups.values():
         has_priority = any(
-            m.calculation_priority not in ("", None) for m in members
+            m.calculation_priority not in ("", None) for m, _t, _v in members
         )
-        if has_priority:
-            # Winner selection orders the CASE arms by priority (stable: ties
-            # keep file order — reference to_codes.py:269-281 only overwrites
-            # on a strictly lower priority number).
-            win_order = sorted(
-                compiled,
-                key=lambda e: int(e[0].calculation_priority)
-                if e[0].calculation_priority not in ("", None)
-                else 1 << 30,
-            )
-        else:
-            win_order = compiled
+        # Winner selection orders the CASE arms by priority (stable: ties
+        # keep file order — reference to_codes.py:269-281 only overwrites on
+        # a strictly lower priority number); otherwise file order.
+        win_order = sorted(
+            members,
+            key=lambda e: int(e[0].calculation_priority)
+            if e[0].calculation_priority not in ("", None)
+            else 1 << 30,
+        ) if has_priority else members
+        # First-match-wins within the group: one CASE WHEN yields the
+        # winner's (id, value) entry; Catalyst short-circuits like the
+        # reference's break.  A passing test always has a non-NULL value.
+        var_entries.append(
+            _case([(t, _entry(_sq(m.id), v)) for m, t, v in win_order])
+        )
+        winner_id = _case([(t, _sq(m.id)) for m, t, _v in win_order])
 
-        # First-match-wins within the group: one CASE WHEN for the id and one
-        # for the value; Catalyst short-circuits like the reference's break.
-        winner_id = "coalesce({})".format(
-            ", ".join(
-                f"CASE WHEN {t} THEN {_sq(m.id)} END"
-                for (m, t, _v) in win_order
-            )
-        ) if compiled else "NULL"
-        winner_val = "coalesce({})".format(
-            ", ".join(
-                f"CASE WHEN {t} THEN CAST({v} AS STRING) END"
-                for (m, t, v) in win_order
-            )
-        ) if compiled else "NULL"
-        var_entries.append((winner_id, winner_val))
-
-        for m, t, _v in compiled:
+        for m, t, _v in members:
             # Side effects (categories/alert/disregard): in NON-priority
             # groups the reference breaks after the first applicable member,
             # so only the winner fires.  In priority groups there is no break
@@ -481,12 +474,10 @@ def compile_rules_sql(
             # order, even if it loses the variable_json priority contest.
             hit = t if has_priority else f"({t} AND ({winner_id} = {_sq(m.id)}))"
             for cat in m.category:
-                cat_arms.setdefault(cat, []).append(
-                    f"CASE WHEN {hit} THEN {_sq(m.id)} END"
-                )
+                cat_arms.setdefault(cat, []).append((hit, m.id))
             if m.alert and m.alert_type == "individual":
                 alert_arms.append(hit)
-                alert_reason_arms.append(f"CASE WHEN {hit} THEN {_sq(m.id)} END")
+                alert_reason_arms.append((hit, _sq(m.id)))
             if m.disregard:
                 disregard_arms.append(hit)
 
@@ -494,34 +485,26 @@ def compile_rules_sql(
     # C6 alert_data: when an individual alert fires, copy the configured
     # form columns into variables as alert_<name>, plus the alert marker
     # entries themselves (to_codes.py:292-301; demo_config.py:148-155).
-    if alert_data:
-        for name, src in alert_data.items():
-            var_entries.append(
-                (
-                    f"CASE WHEN {alert} THEN {_sq('alert_' + name)} END",
-                    f"CAST({_qid(src)} AS STRING)",
-                )
-            )
-
-    variables = _sparse_map(var_entries, guard_on="key")
+    for name, src in (alert_data or {}).items():
+        entry = _entry(_sq("alert_" + name), _qid(src))
+        var_entries.append(f"CASE WHEN {alert} THEN {entry} END")
+    # C8 literal entries (data_type var + data_entry) come last.
+    var_entries += [
+        _entry(_sq(k), _sq(v)) for k, v in (extra_variables or {}).items()
+    ]
 
     # Reference categories semantics is dict-update per firing member over
     # the file-ordered iteration (to_codes.py:287-290): the LAST write wins,
-    # hence coalesce over the arms reversed.
-    categories = _sparse_map(
-        [
-            (_sq(cat), "coalesce({})".format(", ".join(reversed(arms))))
-            for cat, arms in cat_arms.items()
-        ],
-        guard_on="value",
-    )
+    # hence the arms reversed.
+    categories = _sparse_map([
+        _case([(h, _entry(_sq(cat), _sq(rid))) for h, rid in reversed(arms)])
+        for cat, arms in cat_arms.items()
+    ])
 
     # alert_reason is likewise overwritten by every firing individual-alert
     # rule (to_codes.py:295-301) — last write wins.
     alert_reason = (
-        "coalesce({}, CAST(NULL AS STRING))".format(
-            ", ".join(reversed(alert_reason_arms))
-        )
+        _case(list(reversed(alert_reason_arms)))
         if alert_reason_arms
         else "CAST(NULL AS STRING)"
     )
@@ -533,35 +516,13 @@ def compile_rules_sql(
     # alert.
     disregard = f"({disregard_raw} AND {alert})"
 
-    return {
-        "variables": variables,
+    return tests, {
+        "variables": _sparse_map(var_entries),
         "categories": categories,
         "alert": alert,
         "alert_reason": alert_reason,
         "disregard": disregard,
     }
-
-
-def compile_rules(
-    rules: list[Rule],
-    epi_config: str | dict = "international",
-    link_structs: dict[str, str] | None = None,
-    alert_data: dict[str, str] | None = None,
-    available: set[str] | None = None,
-    types: dict[str, str] | None = None,
-) -> CodedOutput:
-    """Column-API wrapper over :func:`compile_rules_sql` (five F.expr
-    parses — the string compiler is the implementation)."""
-    out = compile_rules_sql(
-        rules, epi_config, link_structs, alert_data, available, types
-    )
-    return CodedOutput(
-        F.expr(out["variables"]),
-        F.expr(out["categories"]),
-        F.expr(out["alert"]),
-        F.expr(out["alert_reason"]),
-        F.expr(out["disregard"]),
-    )
 
 
 def code_dataframe(
@@ -571,7 +532,7 @@ def code_dataframe(
     extra_variables: dict[str, str] | None = None,
     alert_data: dict[str, str] | None = None,
 ) -> DataFrame:
-    """Apply the compiled coding projection to a form DataFrame.
+    """Apply the two compiled coding projections to a form DataFrame.
 
     Adds ``variables``, ``categories``, ``alert``, ``alert_reason``,
     ``disregard`` columns; ``extra_variables`` are the C8 literal entries
@@ -596,22 +557,17 @@ def code_dataframe(
             link_structs[rule.id] = cname
     if struct_exprs:
         df = df.selectExpr("*", *struct_exprs)
-    out = compile_rules_sql(
-        rules, epi_config, link_structs, alert_data,
+    tests, out = compile_rules_sql(
+        rules, epi_config, link_structs, alert_data, extra_variables,
         available=set(df.columns), types=dict(df.dtypes),
     )
-    variables = out["variables"]
-    if extra_variables:
-        kvs = ", ".join(
-            _sq(x) for kv in extra_variables.items() for x in kv
+    # Lower projection: every rule test once per row; upper: the outputs
+    # from those booleans.  CollapseProject does not merge the two while a
+    # test column is referenced more than once.
+    if tests:
+        df = df.selectExpr(
+            "*", *(f"{sql} AS {_qid(n)}" for n, sql in tests.items())
         )
-        variables = f"map_concat({variables}, map({kvs}))"
     return df.withColumns(
-        {
-            "variables": F.expr(variables),
-            "categories": F.expr(out["categories"]),
-            "alert": F.expr(out["alert"]),
-            "alert_reason": F.expr(out["alert_reason"]),
-            "disregard": F.expr(out["disregard"]),
-        }
-    ).drop(*link_structs.values())
+        {name: F.expr(sql) for name, sql in out.items()}
+    ).drop(*link_structs.values(), *tests)

@@ -376,3 +376,151 @@ def test_between_on_dates(spark):
         ["d1", "d2"],
     )
     assert [p for p, _ in res] == [True, False, False]
+
+
+# --- whole-stage compile at codes-file size, and the output contract -------
+
+_ICD = [f"{c}{n:02d}" for c in "ABEIJ" for n in range(24)]
+
+
+def _linked_cases(spark):
+    """Case rows with the columns the perfbench codes mix reads, plus a
+    ``link_fu`` array (one row has two follow-ups, one has none)."""
+    from meerkat_abacus_spark.operators.links import LinkDef, add_links
+
+    rows = [
+        ("u1", "A01", "fever cough", "3", "female", "p1", "2017-01-14", "k1"),
+        ("u2", "B02", "rash", "34", "male", "p2", "2017-02-01", "k2"),
+        ("u3", "J23", "", "70", "male", "", "garbage", "nomatch"),
+        ("u4", None, "cough", "", None, "p4", "", "k1"),
+    ]
+    base = spark.createDataFrame(
+        rows, ["uuid", "icd", "symptoms", "age", "gender", "pid", "sub", "key"]
+    )
+    fu = spark.createDataFrame(
+        [("f1", "k1", "2017-01-20"), ("f2", "k1", "2017-01-27"),
+         ("f3", "k2", "2017-02-03")],
+        ["uuid", "key", "date"],
+    )
+    link = LinkDef(name="fu", type="case", to_form="fu", from_form="case",
+                   from_column="key", to_column="key", order_by="date;date",
+                   uuid="uuid")
+    return add_links(base, {"fu": fu}, [link])
+
+
+def _perfbench_mix(n: int) -> list:
+    """``n`` case rules in the perfbench codes file's method mix: ICD match
+    rules (two raise individual alerts), sub_match, between with a
+    calculation, value (raw and date), a calculation group and one link
+    rule."""
+    rules = [
+        Rule(id="ret_1", method="value", db_column="uuid",
+             multiple_link="count", form="fu", category=["links"]),
+        Rule(id="val_pid", method="value", db_column="pid"),
+        Rule(id="val_sub", method="value", db_column="sub", calculation="date"),
+    ]
+    for k, (lo, hi) in enumerate([(0, 1), (1, 5), (5, 15), (15, 25),
+                                  (25, 50), (50, 200)]):
+        rules.append(Rule(id=f"age_{k}", method="between", db_column="age",
+                          condition=f"{lo},{hi}", calculation="age",
+                          category=["age"], calculation_group="age"))
+    for k, (g, lo, hi) in enumerate([("female", 0, 5), ("male", 15, 50)]):
+        rules.append(Rule(id=f"agegen_{k}", method="match and between",
+                          db_column="gender;age", condition=f"{g};{lo},{hi}",
+                          calculation=";age", category=["demo"]))
+    for k, s in enumerate(["fever", "cough", "rash", "vomit", "ache"]):
+        rules.append(Rule(id=f"sym_{k}", method="sub_match",
+                          db_column="symptoms", condition=s,
+                          category=["symptoms"]))
+    k = 0
+    while len(rules) < n:
+        codes = [_ICD[k % len(_ICD)]] + ([_ICD[(k * 7 + 3) % len(_ICD)]]
+                                         if k % 3 == 2 else [])
+        rules.append(Rule(id=f"cmd_{k}", method="match", db_column="icd",
+                          condition=",".join(codes), category=["cd_tab"],
+                          alert=k in (1, 2), alert_type="individual"))
+        k += 1
+    return rules
+
+
+@pytest.mark.parametrize("n_rules", [90, 110, 130])
+def test_codes_file_sized_projection_compiles(spark, n_rules):
+    """A codes file of 90-130 case rules codes with whole-stage codegen and
+    no fallback: a projection past Janino's 64 KB method limit fails here
+    instead of being logged and re-run interpreted.  The compiled answers
+    equal the answers with whole-stage codegen off."""
+    rules = _perfbench_mix(n_rules)
+    assert len(rules) == n_rules
+    linked = _linked_cases(spark)
+    extra = {"tot_1": "1", "data_entry": "1"}
+
+    def coded():
+        out = code_dataframe(linked, rules, extra_variables=extra)
+        return sorted(
+            out.selectExpr(
+                "uuid", "map_entries(variables) AS v",
+                "map_entries(categories) AS c", "alert", "alert_reason",
+                "disregard",
+            ).collect()
+        )
+
+    keys = ("spark.sql.codegen.fallback", "spark.sql.codegen.wholeStage")
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        spark.conf.set("spark.sql.codegen.fallback", "false")
+        compiled = coded()
+        spark.conf.set("spark.sql.codegen.wholeStage", "false")
+        spark.conf.set("spark.sql.codegen.fallback", "true")
+        assert compiled == coded()
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    by_uuid = {r["uuid"]: r for r in compiled}
+    u1 = dict((e["key"], e["value"]) for e in by_uuid["u1"]["v"])
+    assert u1["ret_1"] == "2" and u1["age_1"] == "1" and u1["agegen_0"] == "1"
+    assert u1["val_sub"] == "2017-01-14T00:00:00" and u1["cmd_1"] == "1"
+    assert by_uuid["u1"]["alert"] is True
+    assert by_uuid["u1"]["alert_reason"] == "cmd_1"
+    assert "ret_1" not in dict((e["key"], e["value"]) for e in by_uuid["u3"]["v"])
+
+
+def test_coding_output_contract(spark):
+    """variables/categories are NOT NULL MAP<STRING,STRING>; their keys come
+    out in codes-file group order (extra variables last); no helper column
+    of the two projections survives."""
+    from pyspark.sql.types import MapType, StringType
+
+    rules = [
+        Rule(id="z_last", method="match", db_column="c", condition="hit",
+             multiple_link="last", form="fu", category=["zeta"]),
+        Rule(id="m_2", method="match", db_column="c", condition="hit",
+             calculation_group="m", category=["alpha"]),
+        Rule(id="b_1", method="match", db_column="c", condition="hit",
+             category=["zeta", "beta"]),
+        Rule(id="m_1", method="match", db_column="c", condition="hit",
+             calculation_group="m", category=["alpha"]),
+        Rule(id="a_0", method="not_null", db_column="c"),
+    ]
+    base = spark.createDataFrame([("u1", "hit")], ["uuid", "c"]).selectExpr(
+        "*",
+        "array(named_struct('__sort', 1, '__uuid', 'f1',"
+        " 'row', named_struct('c', 'hit'))) AS link_fu",
+    )
+    out = code_dataframe(base, rules, extra_variables={"tot_1": "1"})
+    fields = {f.name: f for f in out.schema.fields}
+    for name in ("variables", "categories"):
+        assert not fields[name].nullable
+        assert isinstance(fields[name].dataType, MapType)
+        assert fields[name].dataType.keyType == StringType()
+        assert fields[name].dataType.valueType == StringType()
+    assert [c for c in out.columns if c.startswith(("__t", "__lr_"))] == []
+    assert out.columns == base.columns + [
+        "variables", "categories", "alert", "alert_reason", "disregard",
+    ]
+    row = out.selectExpr(
+        "map_keys(variables) AS vk", "map_keys(categories) AS ck",
+        "categories['zeta'] AS zeta",
+    ).first()
+    assert row["vk"] == ["z_last", "m_2", "b_1", "a_0", "tot_1"]
+    assert row["ck"] == ["zeta", "alpha", "beta"]
+    assert row["zeta"] == "b_1"   # last write in file order wins

@@ -37,8 +37,8 @@ from pyspark.sql import functions as F
 from meerkat_abacus_spark.operators.coding import (
     Resolver,
     Rule,
+    code_dataframe,
     compile_rule_test,
-    compile_rules,
 )
 
 COLS = ["c0", "c1", "c2", "c3"]
@@ -362,9 +362,8 @@ def test_group_priority_structures_match_reference_model(spark):
                 rules.append(r)
                 rid += 1
 
-        out = compile_rules(rules, "international", available=set(COLS))
-        got = df.select(
-            out.variables.alias("vars"), out.categories.alias("cats")
+        got = code_dataframe(df, rules).select(
+            F.col("variables").alias("vars"), F.col("categories").alias("cats")
         ).collect()
         for ri, row in enumerate(rows):
             exp_vars, exp_cats = ref_group_outcome(rules, row)

@@ -291,9 +291,9 @@ def multiprobe_buckets(
     the default radius 2).
 
     Single-expression convenience form — fine for ad-hoc composition, but
-    :func:`lsh_topk` and :func:`lsh_topk_from_index_join` instead stage
-    the projection dots and home string as their own columns and expand
-    the ball with :func:`_probe_keys_from_home`: building every key
+    :func:`lsh_topk` instead stages the projection dots and home string
+    as their own columns and expands the ball with
+    :func:`_probe_keys_from_home`: building every key
     straight from the vector repeats the projection subtree per key
     reference, and the per-key sign-test form exceeds Janino's 64 KB
     codegen method limit under ANSI (r14).  The index probes
@@ -354,9 +354,8 @@ def _probe_keys_from_home(home: Column, nbits: int, radius: int) -> Column:
     key, keeping the whole probe fan-out inside whole-stage codegen.
     The caller must stage ``home`` as its own projection (a withColumn
     before the explode) — it is non-cheap, so CollapseProject will not
-    re-inline it into every key.  Its callers are :func:`lsh_topk` and
-    :func:`lsh_topk_from_index_join`; the other index probes expand the
-    ball on the driver (:func:`_hamming_ball`)."""
+    re-inline it into every key.  Its caller is :func:`lsh_topk`; the
+    index probes expand the ball on the driver (:func:`_hamming_ball`)."""
     import itertools
 
     def flip_at(i: int) -> Column:  # 1-indexed char position
@@ -598,12 +597,10 @@ def write_lsh_index(
         # through the Hadoop FS API.)
         import os
 
-        open(os.path.join(path, _LSH_NORMS_MARKER), "w").close()
-    # A rewrite invalidates any cached reader handle / row-count memo.
+        open(os.path.join(path, _NORMS_MARKER), "w").close()
+    # A rewrite invalidates any cached reader handle.
     for key in [k for k in _INDEX_READERS if k[1] == path]:
         _INDEX_READERS.pop(key, None)
-    for key in [k for k in _INDEX_ROWCOUNTS if k[1] == path]:
-        _INDEX_ROWCOUNTS.pop(key, None)
 
 
 def lsh_topk_from_index(
@@ -622,13 +619,14 @@ def lsh_topk_from_index(
 
     Identical results to the in-memory :func:`lsh_topk` at the same
     ``radius`` (the ann_lsh_indexed driver row certifies it by sharing the
-    oracle).  One collect fetches the query rows; the driver projects each
-    one onto the hyperplanes with the same left fold as :func:`_plane_dot`,
-    so every sign bit matches the Spark expression, and
-    :func:`_score_staged` serves the batch.  The probe keys reach the
+    oracle).  One collect brings the whole query batch to the driver, so
+    the batch must fit in driver memory: the largest any caller sends is
+    the 2,000-row sf0.1 corpus (``ann_lsh_auto``).  The driver projects
+    each row onto the hyperplanes with the same left fold as
+    :func:`_plane_dot`, so every sign bit matches the Spark expression,
+    and :func:`_score_staged` serves the batch.  The probe keys reach the
     index scan as a literal partition filter, bounded by ``2^nbits``
-    whatever the batch size (a cluster-scale batch takes
-    :func:`lsh_topk_from_index_join` instead).
+    whatever the batch size.
     """
     qf = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
@@ -728,316 +726,6 @@ def _score_staged(
     return spark.sql(text, q=staged, idx=idx)
 
 
-def lsh_topk_from_index_join(
-    spark,
-    index_path: str,
-    queries: DataFrame,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 3,
-    nbits: int = 8,
-    radius: int = 2,
-    seed: str = LSH_SEED,
-) -> DataFrame:
-    """Massive-query-batch probe of a persisted sign-LSH index: identical
-    results to :func:`lsh_topk_from_index`, with NO driver collect of the
-    probe keys (VERDICT r8 ask #6) — the exploded ``(query_id, qv,
-    pbucket)`` probe rows equi-join the bucket-partitioned index scan on
-    ``pbucket`` directly, and dynamic partition pruning turns the probe
-    side into a runtime partition filter on the scan (``dynamicpruning``
-    subquery in ``PartitionFilters``), so only the probed bucket
-    directories are read — the :func:`ivf_topk_from_index_join` pattern
-    applied to sign-LSH.
-
-    The isin path's collect is a driver round-trip whose literal list
-    grows with ``nbits``; this path scales with the join instead.  The
-    probe side is deliberately UNHINTED: a driver-sized query batch plans
-    as a broadcast join whose exchange DPP reuses as the pruning subquery
-    (asserted by the unit test); a genuinely cluster-sized batch degrades
-    to a shuffle on ``pbucket`` — at that probe cardinality most buckets
-    are touched anyway, so pruning would buy little by construction.
-
-    MEASURED crossover (SCALE_ANN_r10 ``lsh_batch_crossover`` leg, 100×
-    corpus ≈ 50k vectors): at 20 queries the collect path wins (1.7 s vs
-    1.9 s — the literal filter is planned once, no join exchange); at
-    2 000 queries the join path wins decisively (30.8 s vs 49.4 s — the
-    collect variant, as it then was, re-materialized the probe frame, and
-    its literal filter stops pruning once most buckets are probed).  Rule of
-    thumb: member/driver-sized batches → :func:`lsh_topk_from_index` /
-    ``_by_id``; corpus-joined batches → this function.
-    """
-    staged = (
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-        )
-        .withColumn("_dots", projection_dots(F.col("qv"), dim, nbits, seed))
-        .withColumn("_home", _home_from_dots(F.col("_dots"), nbits))
-    )
-    if radius <= 0:
-        probed = staged.select(
-            "query_id",
-            "qv",
-            F.concat(F.lit("b"), F.col("_home")).alias("pbucket"),
-        )
-    else:
-        probed = staged.select(
-            "query_id",
-            "qv",
-            F.explode(
-                _probe_keys_from_home(F.col("_home"), nbits, radius)
-            ).alias("_k"),
-        ).select(
-            "query_id",
-            "qv",
-            F.concat(F.lit("b"), F.col("_k")).alias("pbucket"),
-        )
-    idx, _ = _lsh_index_frames(spark, index_path)
-    idx = _stored_or_computed_cn(idx)
-    probed = probed.withColumn("__qn", l2_norm(F.col("qv")))
-    sim = dot_product(F.col("qv"), F.col("cv")) / (
-        F.col("__qn") * F.col("__cn")
-    )
-    scored = (
-        idx.join(probed, "pbucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-
-
-# Measured isin-collect vs join-DPP crossover (SCALE_ANN r10-r13
-# ``lsh_batch_crossover``): at the 200k-vector (100x) corpus, 20 queries
-# favor the collect path (2.3 vs 2.4 s) and 2000 favor the join path
-# decisively (54.5 vs 32.8 s at r13) — geometric midpoint ≈ 200.  But the
-# crossover scales with the INDEX side too (VERDICT r13 "what's wrong"
-# #2): at the 2k-vector sf0.1 index, q2000 isin-collect runs 2.43 s vs
-# join-DPP 5.17 s — the join's fixed DPP/shuffle overhead never pays when
-# the whole index scans in under a second.  So the dispatcher scales the
-# switch point inversely with index rows, anchored at the calibration
-# corpus: switch = LSH_BATCH_SWITCH * (LSH_CAL_INDEX_ROWS / index_rows),
-# clamped to [LSH_BATCH_SWITCH_MIN, LSH_BATCH_SWITCH_MAX].  At 200k rows
-# that reproduces the old behavior (switch=200: q20→isin, q2000→join);
-# at 2k rows switch=20 000, so q2000 correctly stays on isin-collect.
-LSH_BATCH_SWITCH = 200
-LSH_CAL_INDEX_ROWS = 200_000
-LSH_BATCH_SWITCH_MIN = 20
-LSH_BATCH_SWITCH_MAX = 100_000
-# Ceiling on how many query rows the dispatch probe may evaluate
-# (VERDICT r14 ask #1): when the index is small the scaled switch point
-# is huge (sf0.1: eff = 20 000), so an uncapped ``limit(eff+1).count()``
-# evaluates the ENTIRE batch — which the served path then evaluates
-# again (+22% measured at sf0.1 q2000, SCALE_ANN_r14).  ``eff`` above
-# this cap means the index is small enough (< cal_rows x switch / cap =
-# 40k rows at the defaults) that the collect path wins regardless of
-# batch size — measured at the 2k-row sf0.1 index where q2000 isin beats
-# join 2.43 vs 5.17 s, and the isin probe-key literal list is bounded by
-# 2^nbits buckets, never by the batch size — so the dispatcher picks
-# isin WITHOUT running any probe job at all (VERDICT r15 ask #2; the r14
-# implementation still ran a capped-but-dead probe here) and the same
-# rule overrides caller hints (ADVICE r15 #2).  When ``eff`` is at or
-# under the cap, the hintless probe counts at most ``eff + 1`` rows.
-LSH_BATCH_PROBE_CAP = 1000
-
-
-def scaled_batch_switch(
-    index_rows: int,
-    batch_threshold: int = LSH_BATCH_SWITCH,
-    cal_index_rows: int = LSH_CAL_INDEX_ROWS,
-) -> int:
-    """The index-size-scaled isin-vs-join switch point — THE dispatch
-    model, in one place (VERDICT r13 ask #3; extracted r15 so rehearsal
-    tooling reports the same formula production runs): the crossover
-    scales inversely with the index side, anchored at the calibration
-    corpus, clamped to ``[LSH_BATCH_SWITCH_MIN, LSH_BATCH_SWITCH_MAX]``.
-    Validated at three index sizes (2k/20k/200k rows) in
-    SCALE_ANN_r15's ``dispatch_calibration``."""
-    return int(
-        min(
-            max(
-                batch_threshold * cal_index_rows / max(index_rows, 1),
-                LSH_BATCH_SWITCH_MIN,
-            ),
-            LSH_BATCH_SWITCH_MAX,
-        )
-    )
-
-
-def _index_success_fp(index_path: str):
-    """Content fingerprint of a persisted index: the ``_SUCCESS``
-    marker's ``(st_mtime_ns, st_ino)`` (ADVICE r14 #4; inode added r16
-    per ADVICE r15 #4).  Every write path that mutates the tree — base
-    write, delta append, compaction swap — recommits the marker, so a
-    rewrite by ANOTHER process changes the fingerprint and invalidates
-    this process's memoized state on the next hit (in-process writers
-    already invalidate eagerly).  The marker file is RECREATED on every
-    commit, so the inode term catches mtime-preserving rewrites
-    (``rsync -t`` / ``cp -p`` restores of a different index, or a
-    coarse-mtime filesystem landing two commits in one tick) that
-    mtime alone would miss; ``_SUCCESS`` is zero bytes, so size would
-    add nothing.  ``None`` (marker unreadable) is never memoized, so a
-    mid-rewrite window falls back to recomputation rather than serving
-    stale state."""
-    import os
-
-    try:
-        st = os.stat(os.path.join(index_path, "_SUCCESS"))
-        return (st.st_mtime_ns, st.st_ino)
-    except OSError:
-        return None
-
-
-def _lsh_index_rows(spark, index_path: str) -> int:
-    """Row count of a persisted LSH index, memoized per (app, path).
-
-    ``count()`` over a parquet scan is answered from file-footer row
-    counts (no column data read), so the first dispatch per process pays
-    one bounded metadata job; writers and compaction invalidate the memo
-    alongside the reader-handle cache, and the stored ``_SUCCESS``
-    fingerprint catches rewrites by OTHER processes (ADVICE r14 #4)."""
-    key = (spark.sparkContext.applicationId, index_path)
-    fp = _index_success_fp(index_path)
-    # LRU, not FIFO (VERDICT r14 ask #6): pop+reinsert on hit moves the
-    # key to the end of the dict's insertion order, so eviction (which
-    # pops the FRONT) always drops the least-recently-USED entry — a hot
-    # index alternating with many cold ones survives the pressure.
-    got = _INDEX_ROWCOUNTS.pop(key, None)
-    if got is None or got[0] != fp or fp is None:
-        idx, _ = _lsh_index_frames(spark, index_path)
-        got = (fp, idx.count())
-        while len(_INDEX_ROWCOUNTS) >= 16:
-            _INDEX_ROWCOUNTS.pop(next(iter(_INDEX_ROWCOUNTS)))
-    if fp is not None:
-        # fp None (no readable _SUCCESS — e.g. marksuccessfuljobs=false
-        # or an object-store committer that omits the marker) is never
-        # memoized: such an entry could never be SERVED (a None
-        # fingerprint never matches), so inserting it would only occupy
-        # an LRU slot and evict live entries (ADVICE r15 #3).
-        _INDEX_ROWCOUNTS[key] = got
-    return got[1]
-
-
-def lsh_topk_from_index_auto(
-    spark,
-    index_path: str,
-    queries: DataFrame,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 3,
-    nbits: int = 8,
-    radius: int = 2,
-    seed: str = LSH_SEED,
-    batch_threshold: int = LSH_BATCH_SWITCH,
-    chosen: list | None = None,
-    n_queries: "int | str | None" = None,
-    cal_index_rows: int = LSH_CAL_INDEX_ROWS,
-) -> DataFrame:
-    """Serving-path dispatcher for the persisted sign-LSH index (VERDICT
-    r12 ask #6): when the scaled switch point is at most
-    ``LSH_BATCH_PROBE_CAP``, sizes the query side with a bounded
-    ``limit(threshold+1).count()`` — the LocalLimit reaches a plain scan
-    so simple batches stop early (a batch behind an aggregate/join still
-    computes its upstream once; the probe is bounded in ROWS RETURNED,
-    not upstream work); when the switch point EXCEEDS the cap (a tiny
-    index), no probe job runs at all (VERDICT r15 ask #2) because the
-    collect path wins at every admissible batch size — then picks
-    :func:`lsh_topk_from_index` (queries staged on the driver, probe keys
-    as a literal partition filter; wins for member/driver-sized batches and
-    for ANY batch against a small index, where the whole scan is cheaper
-    than the join's fixed DPP overhead) or
-    :func:`lsh_topk_from_index_join` (DPP equi-join, no driver collect;
-    wins for corpus-joined batches against large indexes).  A scaled
-    threshold above the cap certifies the index is under ~40k rows at
-    the defaults, and the collect path's driver literal list is bounded
-    by 2^nbits buckets, never by the batch size — so that regime is
-    decided without touching the batch.  Both paths return
-    identical rows for whatever batch they evaluate, so the dispatch
-    changes plan shape only, never answers.
-
-    The switch point is INDEX-SIZE-AWARE (VERDICT r13 ask #3): the
-    isin-vs-join crossover scales with the index side, not just the
-    query count — at the 200k-vector calibration corpus q2000 favors the
-    join (32.8 vs 54.5 s) but at a 2k-vector index the same q2000 favors
-    isin-collect (2.43 vs 5.17 s, SCALE_ANN_r13) because the join's
-    fixed DPP/shuffle overhead never pays when the whole index scans in
-    under a second.  ``batch_threshold`` (default ``LSH_BATCH_SWITCH``)
-    is anchored at ``cal_index_rows`` (default ``LSH_CAL_INDEX_ROWS``)
-    and scaled by ``cal_index_rows / index_rows``, clamped to
-    ``[LSH_BATCH_SWITCH_MIN, LSH_BATCH_SWITCH_MAX]``; the index row count
-    comes from a memoized footer-metadata ``count()``
-    (:func:`_lsh_index_rows`, one bounded job per process per index,
-    invalidated on rewrite).
-
-    ``n_queries`` (ADVICE r13 #4): a caller-supplied batch-size hint that
-    skips the probe entirely — pass it when the batch size is already
-    known (or the batch is expensive/nondeterministic, where the probe
-    would recompute the upstream and could be dispatched on a count that
-    disagrees with the served batch).  The string ``"index"`` means "the
-    batch is the corpus the index was built from" and resolves to the
-    dispatcher's memoized index row count (VERDICT r15 ask #6 — no
-    private imports needed).  Production call sites with a
-    statically-known batch size DO pass it (VERDICT r14 ask #1 — e.g.
-    ``queries/ann.py``'s small-regime filter).  When the scaled switch
-    exceeds ``LSH_BATCH_PROBE_CAP`` the dispatch is decided BEFORE any
-    probe or hint is consulted (VERDICT r15 ask #2): a tiny index takes
-    the collect path at every admissible batch size, so the hintless
-    probe job is skipped and a hint cannot flip the plan (ADVICE r15
-    #2 — hinted and hintless dispatch agree in this regime).  Otherwise,
-    without the hint, at most ``threshold+1 ≤ LSH_BATCH_PROBE_CAP+1``
-    rows of ``queries`` are evaluated for the count before the chosen
-    path evaluates the batch — pass a deterministic batch, or call the
-    specific path directly.
-
-    ``chosen`` is a test hook: when passed, the picked function's name is
-    appended so plan-selection tests can assert the switch without
-    parsing plans."""
-    index_rows = _lsh_index_rows(spark, index_path)
-    eff = scaled_batch_switch(index_rows, batch_threshold, cal_index_rows)
-    if n_queries == "index":
-        # Public spelling of "the batch IS the corpus the index holds"
-        # (VERDICT r15 ask #6): resolved from the dispatcher's own
-        # memoized footer-metadata count — callers no longer import the
-        # private _lsh_index_rows to build this hint.
-        n_queries = index_rows
-    if eff > LSH_BATCH_PROBE_CAP:
-        # Small-index short-circuit (VERDICT r15 ask #2 / ADVICE r15
-        # #1-#2): a switch point past the probe cap certifies the index
-        # is under ~40k rows at the defaults, where isin wins at every
-        # admissible batch size (the probe-key literal list is bounded
-        # by 2^nbits buckets, never by the batch) — so neither the
-        # probe job nor a caller hint can change the answer.  Decide
-        # BEFORE probing: the capped limit/count was dead work here
-        # (the r14 double-evaluation, re-capped but not eliminated),
-        # and hinted vs hintless dispatch now agree in this regime
-        # instead of a large hint flipping the same workload to join.
-        isin = True
-    elif n_queries is not None:
-        isin = n_queries <= eff
-    else:
-        # Bounded probe (VERDICT r14 ask #1): eff ≤ LSH_BATCH_PROBE_CAP
-        # here, so at most eff+1 ≤ cap+1 batch rows are ever evaluated
-        # for dispatch.  Unsaturated ⇒ the count is exact and ≤ eff ⇒
-        # isin; saturated ⇒ the batch provably exceeds the switch ⇒
-        # join.
-        n = queries.limit(eff + 1).count()
-        isin = n <= eff
-    fn = lsh_topk_from_index if isin else lsh_topk_from_index_join
-    if chosen is not None:
-        chosen.append(fn.__name__)
-    return fn(
-        spark, index_path, queries, dim,
-        id_col=id_col, vec_col=vec_col, k=k, nbits=nbits, radius=radius,
-        seed=seed,
-    )
-
-
 def _hamming_ball(bits: str, radius: int) -> list[str]:
     """All bit strings within Hamming distance ``radius`` of ``bits`` —
     home first, then flips in mask order (driver-side mirror of
@@ -1052,12 +740,11 @@ def _hamming_ball(bits: str, radius: int) -> list[str]:
     ]
 
 
-# Reader handles for persisted LSH indexes, keyed by (appId, path): the
-# index is immutable once written (scratch paths are fingerprint-versioned),
-# but a fresh spark.read.parquet() per probe re-lists all 2^nbits bucket
-# directories and re-infers the schema from footers (~0.5 s/call measured).
-# Caching the DataFrame handle reuses the FileIndex; the explicit schema
-# skips footer inference and pins the partition column to STRING.
+# Reader handles for persisted indexes, keyed by (appId, path, layout):
+# a fresh spark.read.parquet() per probe re-lists every partition directory
+# and re-infers the schema from footers (~0.5 s/call measured).  Caching
+# the DataFrame handle reuses the FileIndex; the explicit schema skips
+# footer inference and pins the partition column's type.
 _LSH_INDEX_SCHEMA = "neighbor_id long, cv array<double>, pbucket string"
 # v2 layout additionally stores the row norm; gated by the _NORMS_STORED
 # marker because the reader pins an explicit schema (no inference pass) —
@@ -1066,7 +753,6 @@ _LSH_INDEX_SCHEMA_V2 = (
     "neighbor_id long, cv array<double>, cn double, pbucket string"
 )
 _NORMS_MARKER = "_NORMS_STORED"
-_LSH_NORMS_MARKER = _NORMS_MARKER  # back-compat alias
 # IVF layout, same v1/v2 split gated on the marker (ADVICE r9 #2: the
 # reader must not select ``cn`` unless every file carries it).
 _IVF_INDEX_SCHEMA = "neighbor_id long, cv array<double>, list_id int"
@@ -1074,66 +760,81 @@ _IVF_INDEX_SCHEMA_V2 = (
     "neighbor_id long, cv array<double>, cn double, list_id int"
 )
 _INDEX_READERS: "dict[tuple, tuple]" = {}
-# Memoized index row counts for the serving-path dispatcher — invalidated
-# at the same sites as the reader handles (any rewrite of the path).
-_INDEX_ROWCOUNTS: "dict[tuple, int]" = {}
+
+
+def _index_success_fp(index_path: str):
+    """Content fingerprint of a persisted index: the ``_SUCCESS``
+    marker's ``(st_mtime_ns, st_ino)``.  Every write path that mutates
+    the tree — base write, delta append, compaction swap — recommits the
+    marker, so a rewrite by ANOTHER process changes the fingerprint and
+    invalidates this process's cached readers on the next hit
+    (in-process writers already invalidate eagerly).  The marker file is
+    RECREATED on every commit, so the inode term catches mtime-preserving
+    rewrites (``rsync -t`` / ``cp -p`` restores of a different index, or
+    a coarse-mtime filesystem landing two commits in one tick) that mtime
+    alone would miss; ``_SUCCESS`` is zero bytes, so size would add
+    nothing.  ``None`` (marker unreadable) is never memoized, so a
+    mid-rewrite window falls back to a fresh reader rather than serving a
+    stale one."""
+    import os
+
+    try:
+        st = os.stat(os.path.join(index_path, "_SUCCESS"))
+        return (st.st_mtime_ns, st.st_ino)
+    except OSError:
+        return None
+
+
+def _index_readers(
+    spark, index_path: str, layout: str, schemas: tuple, paths: tuple
+) -> tuple:
+    """Pinned-schema readers over ``paths`` for the ``layout`` index at
+    ``index_path``, memoized in ``_INDEX_READERS`` under
+    ``(appId, index_path, layout)``.  ``schemas`` is the
+    (v1, v2) pair; v2 (stored ``cn`` norms) applies only when the
+    ``_NORMS_STORED`` marker certifies every file carries the column, so
+    a pre-cn index (or a mixed base+delta tree whose overwrite predates
+    norms) reads under v1 and recomputes norms.
+
+    The memo holds 16 entries and is LRU, not FIFO: pop+reinsert on a hit
+    moves the key to the end of the dict's insertion order, so eviction
+    (which pops the FRONT) always drops the least-recently-USED entry.
+    An entry is rebuilt when its ``_SUCCESS`` fingerprint no longer
+    matches (a rewrite by another process), and a ``None`` fingerprint
+    (no readable ``_SUCCESS`` — e.g. marksuccessfuljobs=false or an
+    object-store committer that omits the marker) is never inserted: it
+    could never be served, so it would only evict live entries."""
+    import os
+
+    key = (spark.sparkContext.applicationId, index_path, layout)
+    fp = _index_success_fp(index_path)
+    got = _INDEX_READERS.pop(key, None)
+    if got is None or got[0] != fp or fp is None:
+        v2 = os.path.exists(os.path.join(index_path, _NORMS_MARKER))
+        schema = schemas[v2]
+        got = (fp, tuple(spark.read.schema(schema).parquet(p) for p in paths))
+        while len(_INDEX_READERS) >= 16:
+            _INDEX_READERS.pop(next(iter(_INDEX_READERS)))
+    if fp is not None:
+        _INDEX_READERS[key] = got
+    return got[1]
 
 
 def _ivf_index_frame(spark, index_path: str) -> DataFrame:
-    """Cached pinned-schema reader for a persisted IVF index — mirrors
-    :func:`_lsh_index_frames` (ADVICE r9 #2): the v2 schema (stored ``cn``
-    norms) applies only when the ``_NORMS_STORED`` marker certifies every
-    file carries the column; a pre-cn index (or a mixed base+delta tree
-    whose overwrite predates norms) reads under the v1 schema and
-    recomputes norms.  Caching the handle reuses the FileIndex and skips
-    footer inference per probe."""
-    import os
-
-    key = (spark.sparkContext.applicationId, index_path, "ivf")
-    fp = _index_success_fp(index_path)
-    # LRU on hit + cross-process rewrite detection via the _SUCCESS
-    # fingerprint (VERDICT r14 ask #6 / ADVICE r14 #4) — see
-    # _lsh_index_rows.
-    got = _INDEX_READERS.pop(key, None)
-    if got is None or got[0] != fp or fp is None:
-        schema = (
-            _IVF_INDEX_SCHEMA_V2
-            if os.path.exists(os.path.join(index_path, _NORMS_MARKER))
-            else _IVF_INDEX_SCHEMA
-        )
-        got = (fp, (spark.read.schema(schema).parquet(index_path),))
-        while len(_INDEX_READERS) >= 16:
-            _INDEX_READERS.pop(next(iter(_INDEX_READERS)))
-    if fp is not None:  # unmatchable entries never occupy LRU slots
-        _INDEX_READERS[key] = got
-    return got[1][0]
+    """Cached reader for a persisted IVF index (:func:`_index_readers`)."""
+    return _index_readers(
+        spark, index_path, "ivf", (_IVF_INDEX_SCHEMA, _IVF_INDEX_SCHEMA_V2),
+        (index_path,),
+    )[0]
 
 
 def _lsh_index_frames(spark, index_path: str):
-    import os
-
-    key = (spark.sparkContext.applicationId, index_path)
-    fp = _index_success_fp(index_path)
-    # LRU on hit + cross-process rewrite detection via the _SUCCESS
-    # fingerprint (VERDICT r14 ask #6 / ADVICE r14 #4) — see
-    # _lsh_index_rows.
-    got = _INDEX_READERS.pop(key, None)
-    if got is None or got[0] != fp or fp is None:
-        schema = (
-            _LSH_INDEX_SCHEMA_V2
-            if os.path.exists(os.path.join(index_path, _LSH_NORMS_MARKER))
-            else _LSH_INDEX_SCHEMA
-        )
-        idx = spark.read.schema(schema).parquet(index_path)
-        byid = spark.read.schema(schema).parquet(
-            index_path + "_byid"
-        )
-        while len(_INDEX_READERS) >= 16:
-            _INDEX_READERS.pop(next(iter(_INDEX_READERS)))
-        got = (fp, (idx, byid))
-    if fp is not None:  # unmatchable entries never occupy LRU slots
-        _INDEX_READERS[key] = got
-    return got[1]
+    """Cached ``(bucket table, id sidecar)`` readers for a persisted
+    sign-LSH index (:func:`_index_readers`)."""
+    return _index_readers(
+        spark, index_path, "lsh", (_LSH_INDEX_SCHEMA, _LSH_INDEX_SCHEMA_V2),
+        (index_path, index_path + "_byid"),
+    )
 
 
 def lsh_topk_from_index_by_id(
@@ -1185,8 +886,9 @@ def write_ivf_index(
     so a probe reads ``n_probe`` directories out of thousands — partition
     PRUNING at the file-listing level, before a single byte of vector data
     is scanned.  At 100 TB this is the difference between an index probe
-    and a table scan; locally the pruned scan is visible as
-    ``PartitionFilters: [list_id IN (...)]`` in the plan.
+    and a table scan; locally the pruned scan is visible as a
+    ``dynamicpruning`` subquery in the scan's ``PartitionFilters``
+    (:func:`ivf_topk_from_index`).
     """
     ranked = centroid_ranker(centroids, vec_col)
     # The row norm is staged once, reused for list assignment, AND STORED
@@ -1232,8 +934,6 @@ def write_ivf_index(
         open(os.path.join(path, _NORMS_MARKER), "w").close()
     for key in [k for k in _INDEX_READERS if k[1] == path]:
         _INDEX_READERS.pop(key, None)
-    for key in [k for k in _INDEX_ROWCOUNTS if k[1] == path]:
-        _INDEX_ROWCOUNTS.pop(key, None)
 
 
 def ivf_topk_from_index(
@@ -1248,75 +948,24 @@ def ivf_topk_from_index(
 ) -> DataFrame:
     """Probe a persisted IVF index (:func:`write_ivf_index`).
 
-    The probed list ids reach the scan as a partition filter (queries are
-    driver-sized here, matching :func:`brute_force_topk`'s broadcast
-    assumption; with a massive query batch, join on ``list_id`` instead
-    and let dynamic partition pruning do the same job).  Results are
-    identical to the in-memory :func:`ivf_topk` under the same centroids —
-    the unit test asserts it.
-    """
-    ranked = centroid_ranker(centroids, vec_col)
-    probed = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        F.explode(
-            F.slice(ranked(F.col(vec_col)), 1, n_probe)["cid"]
-        ).alias("list_id"),
-    )
-    probe_ids = sorted(
-        {r["list_id"] for r in probed.select("list_id").distinct().collect()}
-    )
-    lists = _stored_or_computed_cn(
-        _ivf_index_frame(spark, index_path).filter(
-            F.col("list_id").isin(probe_ids)
-        )
-    )
-    probed = probed.withColumn("__qn", l2_norm(F.col("qv")))
-    sim = dot_product(F.col("qv"), F.col("cv")) / (
-        F.col("__qn") * F.col("__cn")
-    )
-    scored = (
-        F.broadcast(probed)
-        .join(lists, "list_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    The probed ``(query_id, qv, list_id)`` rows equi-join the partitioned
+    index scan on ``list_id``, and Spark's dynamic partition pruning turns
+    the probe side into a runtime partition filter on the scan (a
+    ``dynamicpruning`` subquery in ``PartitionFilters``), so only the
+    probed list directories are read and no probe id reaches the driver.
+    The probe side is unhinted: a small batch plans as a broadcast join
+    whose exchange DPP reuses as the pruning subquery; a cluster-sized
+    batch degrades to a shuffle on ``list_id``, where most lists are
+    touched anyway.
 
-
-def ivf_topk_from_index_join(
-    spark,
-    index_path: str,
-    queries: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 3,
-    n_probe: int = 1,
-) -> DataFrame:
-    """Massive-query-batch probe of a persisted IVF index: identical
-    results to :func:`ivf_topk_from_index`, with NO driver collect of the
-    probe list ids — the probed ``(query_id, qv, list_id)`` rows equi-join
-    the partitioned index scan on ``list_id`` directly, and Spark's dynamic
-    partition pruning turns the probe side into a runtime partition filter
-    on the scan (``dynamicpruning`` subquery in ``PartitionFilters``), so
-    only the probed list directories are read — same pruning the isin
-    variant gets from its literal filter, without the ``collect()``.
-
-    The isin path's collect is a driver round-trip whose literal list is
-    bounded by driver memory; this path scales with the join instead.  The
-    probe side is deliberately UNHINTED: when the query batch is small
-    Spark plans a broadcast join and DPP reuses the broadcast as the
-    pruning subquery (the common case, and what the unit test asserts);
-    when the batch is genuinely cluster-sized the join degrades to a
-    shuffle on ``list_id`` — and at that probe cardinality most lists are
-    touched anyway, so pruning would buy little by construction.
+    Why a join and not a literal filter: collecting the distinct probed
+    list ids and filtering the scan on them as literals costs one more
+    job per probe and measured slower on a 4-vCPU host
+    (``tools/compare.py``, three warm runs each): join 1.8/1.6/1.5 s
+    against literal filter 2.2/2.3/1.6 s at sf0.01, and 1.5/1.4/1.1 s
+    against 2.3/1.6/1.5 s at sf0.1.  Results are identical to the
+    in-memory :func:`ivf_topk` under the same centroids; the unit test
+    asserts it.
     """
     ranked = centroid_ranker(centroids, vec_col)
     probed = queries.select(
@@ -1665,8 +1314,6 @@ def _compact_index_locked(spark, index_path: str) -> dict:
     rows.unpersist()
     for key in [k for k in _INDEX_READERS if k[1] == index_path]:
         _INDEX_READERS.pop(key, None)
-    for key in [k for k in _INDEX_ROWCOUNTS if k[1] == index_path]:
-        _INDEX_ROWCOUNTS.pop(key, None)
     after = _files(index_path) + (_files(byid_path) if has_byid else 0)
     return {
         "kind": kind,

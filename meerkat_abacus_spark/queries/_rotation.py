@@ -62,16 +62,14 @@ REGISTRY_BUDGET = WINDOW * MAX_STALENESS - REGISTRY_MARGIN
 # stale-first fill one-for-one from the SAME r14 cohort, so changed
 # code gets driver-certified this round at zero cost to the r17
 # forward budget — see below):
-# - ann_lsh_auto: the dispatcher decides the small-index regime BEFORE
-#   probing (VERDICT r15 ask #2 — `eff > LSH_BATCH_PROBE_CAP` forces
-#   isin, so the capped probe job was dead work), the same rule now
-#   overrides caller hints so hinted and hintless dispatch agree in
-#   that regime (ADVICE r15 #1-#2), and `n_queries="index"` is the
-#   public spelling of the large-regime hint (ask #6 — queries/ann.py
-#   no longer imports the private `_lsh_index_rows`).
+# - ann_lsh_auto: the (since deleted) isin/join dispatcher decided the
+#   small-index regime BEFORE probing (VERDICT r15 ask #2 — past its
+#   probe cap it forced isin, so the capped probe job was dead work),
+#   the same rule overrode caller hints (ADVICE r15 #1-#2), and
+#   `n_queries="index"` spelled the large-regime hint (ask #6).
 # - ann_lsh_indexed: `_index_success_fp` is now (st_mtime_ns, st_ino) —
 #   the recreated-marker inode catches mtime-preserving rewrites
-#   (ADVICE r15 #4) — and `_lsh_index_frames`/`_lsh_index_rows` skip
+#   (ADVICE r15 #4) — and `_lsh_index_frames` and the row-count memo skip
 #   LRU insertion when the fingerprint is None (ADVICE r15 #3:
 #   unmatchable entries used to occupy slots and evict live ones).
 #   Represents the changed LSH reader/fingerprint functions per the

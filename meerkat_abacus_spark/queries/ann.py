@@ -300,56 +300,25 @@ def incremental_lsh_equals_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ann_lsh_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Auto-dispatched serving of the persisted sign-LSH index (VERDICT
-    r12 ask #6; index-size-aware r13 ask #3): ``lsh_topk_from_index_auto``
-    sizes the query batch (a caller hint when available, else a bounded
-    ``limit(threshold+1).count()`` — skipped entirely in the small-index
-    regime, VERDICT r15 ask #2) and picks the isin-collect path for
-    driver-sized batches or the join-DPP path past the measured
-    crossover — anchored at ~200 queries on the 200k-row calibration
-    corpus and scaled inversely by the probed index's row count, so
-    small indexes (whole scan cheaper than the join's fixed DPP
-    overhead) keep the collect path far longer.
-    This single certified query exercises BOTH
-    regimes: a 20-query batch (dispatches to the collect path — asserted
-    via the test hook) and the full corpus batch (dispatches to the DPP
-    join), tagged by a ``regime`` column; the oracle is the same
+    """Serving of the persisted sign-LSH index at two batch sizes: a
+    20-query batch and the full corpus batch, tagged by a ``regime``
+    column.  Both go through ``lsh_topk_from_index``, which collects the
+    query batch to the driver; the full-corpus batch is the largest any
+    caller sends (2,000 rows at sf0.1).  The oracle is the same
     Hamming-≤2 top-3 SQL evaluated at both scopes, so the driver's hash
-    certifies the dispatcher returns the path-independent answer in each
-    regime."""
+    certifies the one serving path at both sizes."""
     emb = _t(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
     path = _lsh_index_path(spark, sf_dir)
-    chosen: list = []
-    # n_queries hints (VERDICT r14 ask #1): both batch sizes are known
-    # before dispatch — the small regime is a vec_id<20 filter over the
-    # contiguous-id corpus (20 rows at every sf) and the large regime IS
-    # the corpus the index was built from, spelled n_queries="index"
-    # (VERDICT r15 ask #6) so the dispatcher resolves it from its own
-    # memoized footer-metadata count — so neither dispatch evaluates the
-    # batch for sizing and the served path evaluates it exactly once.
-    small = sim.lsh_topk_from_index_auto(
+    small = sim.lsh_topk_from_index(
         spark, path, emb.filter(F.col("vec_id") < 20), dim=_DIM,
         id_col="vec_id", vec_col="embedding", k=3, nbits=_NBITS, radius=2,
-        chosen=chosen, n_queries=20,
     ).withColumn("regime", F.lit("small"))
-    # a 20-query batch is under the threshold at EVERY sf — fail loudly
-    # if a threshold regression ever routes it to the join path
-    if chosen != ["lsh_topk_from_index"]:
-        raise AssertionError(f"small-batch dispatch regressed: {chosen}")
-    large = sim.lsh_topk_from_index_auto(
+    large = sim.lsh_topk_from_index(
         spark, path, emb, dim=_DIM,
         id_col="vec_id", vec_col="embedding", k=3, nbits=_NBITS, radius=2,
-        n_queries="index",
     ).withColumn("regime", F.lit("large"))
-    # NOTE: which path "large" lands on is data-dependent (the r14
-    # index-size-aware scaling keeps sf0.01's 500-row index on the
-    # collect path even for the full-corpus batch — correct there, the
-    # whole index scans in milliseconds) — the oracle certifies the
-    # answer either way BECAUSE the paths are equivalent;
-    # tests/test_similarity_training.py asserts both dispatch directions
-    # on synthetic batches where index and batch size are controlled.
     out = small.unionByName(large)
     return out.select(
         "query_id", "neighbor_id", F.round("cosine", 3).alias("cosine"),
@@ -359,18 +328,18 @@ def ann_lsh_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register("ann_lsh_dpp", _ORACLES["ann_lsh_multiprobe"])
 def ann_lsh_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join-probe serving of the persisted sign-LSH index (VERDICT r8 ask
-    #6): the query batch's Hamming-radius-2 probe keys equi-join the
-    bucket-partitioned index and dynamic partition pruning prunes the
-    scan to the probed ``pbucket`` directories — no driver collect
-    anywhere in the path.  Shares ann_lsh_multiprobe's oracle, so the
-    driver hash-certifies that the DPP serving path returns exactly the
-    in-memory answers (the ivf_topk_from_index_join ≡ ann_ivf_dpp
-    pattern applied to sign-LSH)."""
+    """Serving of the persisted sign-LSH index for a 20-query batch read
+    from the embeddings table: ``lsh_topk_from_index`` collects the
+    batch to the driver and prunes the scan to the probed ``pbucket``
+    directories with a literal partition filter.  Kept under its old
+    name, which dates from a dynamic-partition-pruning join path that is
+    gone.  Shares ann_lsh_multiprobe's oracle, so the driver
+    hash-certifies that the serving path returns exactly the in-memory
+    answers."""
     emb = _t(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    out = sim.lsh_topk_from_index_join(
+    out = sim.lsh_topk_from_index(
         spark, _lsh_index_path(spark, sf_dir),
         emb.filter(F.col("vec_id") < 20), dim=_DIM,
         id_col="vec_id", vec_col="embedding", k=3, nbits=_NBITS, radius=2,
@@ -640,8 +609,9 @@ def _ivf_index_path(spark: SparkSession, sf_dir: str, emb, centroids) -> str:
 @_register("ann_ivf_indexed", _ORACLES["ann_ivf_topk"])
 def ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ivf_topk_from_index over the write_ivf_index layout: the probe's
-    list ids prune partitions at file-listing time (PartitionFilters in
-    the scan — tests/test_similarity_training.py asserts it).  Identical
+    list ids prune partitions through dynamic partition pruning (a
+    dynamicpruning subquery in the scan's PartitionFilters —
+    tests/test_similarity_training.py asserts it).  Identical
     fixture centroids and probes as ann_ivf_topk, so the driver's hash
     compare certifies that the persisted serving path returns exactly the
     in-memory answer."""
@@ -658,18 +628,17 @@ def ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register("ann_ivf_dpp", _ORACLES["ann_ivf_topk"])
 def ann_ivf_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ivf_topk_from_index_join — the massive-query-batch probe: the probe
-    rows equi-join the partitioned index on list_id and DYNAMIC partition
+    """ivf_topk_from_index, the one IVF serving path: the probe rows
+    equi-join the partitioned index on list_id and dynamic partition
     pruning turns the probe side into a runtime partition filter on the
-    scan, with no driver collect of probe ids (the isin variant's driver
-    round-trip is bounded by driver memory; this path scales with the
-    join).  Same fixture centroids/probes and same oracle as ann_ivf_topk,
-    so the hash compare certifies the DPP path returns exactly the
-    in-memory answer; tests/test_similarity_training.py asserts the
-    dynamicpruning subquery is actually in the plan."""
+    scan, with no driver collect of probe ids.  Same fixture
+    centroids/probes and same oracle as ann_ivf_topk, so the hash compare
+    certifies the DPP path returns exactly the in-memory answer;
+    tests/test_similarity_training.py asserts the dynamicpruning subquery
+    is actually in the plan."""
     emb, centroids, queries_df = _ivf_fixture(spark, sf_dir)
     path = _ivf_index_path(spark, sf_dir, emb, centroids)
-    out = sim.ivf_topk_from_index_join(
+    out = sim.ivf_topk_from_index(
         spark, path, queries_df, centroids,
         id_col="vec_id", vec_col="embedding", k=3, n_probe=2,
     )

@@ -376,128 +376,3 @@ def test_verify_artifact_stamp_gate_rows():
             and not row.get("dirty_code_paths")
         )
         assert bool(current) != is_stale
-
-
-def test_dispatch_gate_decisive_vs_coinflip_cells():
-    """VERDICT r15 ask #3: the restated dispatch gate — decisive cells
-    (direct paths >20% apart) hold auto to 1.05x of best; coin-flip
-    cells hold it to the paths' own observed spread (floored at 1.05x).
-    r15's sf0.1 q20 cell (auto 1.27x, paths within 20%, spreads ~1.4x)
-    must PASS under the restated gate; a genuine dispatch miss in a
-    decisive cell must still FAIL."""
-    import os
-    import sys
-
-    sys.path.insert(
-        0,
-        os.path.join(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__))), "tools"),
-    )
-    from ann_scale_rehearsal import dispatch_gate
-
-    def cell(isin, join, auto, hint, isin_samples=None, join_samples=None):
-        best = min(min(isin_samples or [isin]), min(join_samples or [join]))
-        return {
-            "isin_collect": {"sec": isin, "samples": isin_samples or [isin]},
-            "join_dpp": {"sec": join, "samples": join_samples or [join]},
-            "auto": {"sec": auto, "samples": [auto],
-                     "vs_best_direct": round(auto / best, 3)},
-            "auto_hint": {"sec": hint, "samples": [hint],
-                          "vs_best_direct": round(hint / best, 3)},
-        }
-
-    def xover(q20, q2000):
-        out = {"index_rows": 2000}
-        for label, c in (("q20", q20), ("q2000", q2000)):
-            for k, v in c.items():
-                out[f"{label}_{k}"] = v
-        return out
-
-    # the r15 shape: q20 coin-flip (1.377 vs 1.58 direct, within 20%;
-    # within-path spreads ~1.4x), auto at 1.27x — passes restated gate.
-    # q2000 decisive (isin 2.4 vs join 5.2), auto on best within 5%.
-    r15_like = xover(
-        cell(1.377, 1.58, 1.745, 1.91,
-             isin_samples=[1.377, 1.91, 1.52], join_samples=[1.58, 2.2, 1.7]),
-        cell(2.4, 5.2, 2.45, 2.42),
-    )
-    g = dispatch_gate(r15_like)
-    assert g["q20"]["decisive"] is False
-    assert g["q20"]["pass"] is True          # bound = spread (~1.39x)
-    assert g["q2000"]["decisive"] is True
-    assert g["q2000"]["bound"] == 1.05
-    assert g["q2000"]["pass"] is True
-
-    # a real miss: decisive cell, auto 1.5x of best — must fail
-    bad = xover(
-        cell(1.0, 2.0, 1.5, 1.02),
-        cell(2.4, 5.2, 2.45, 2.42),
-    )
-    g2 = dispatch_gate(bad)
-    assert g2["q20"]["decisive"] is True
-    assert g2["q20"]["auto_pass"] is False and g2["q20"]["pass"] is False
-
-    # coin-flip with tight within-path spread: bound floors at 1.05
-    tight = xover(
-        cell(1.0, 1.1, 1.04, 1.03),
-        cell(2.4, 5.2, 2.45, 2.42),
-    )
-    g3 = dispatch_gate(tight)
-    assert g3["q20"]["bound"] == 1.05 and g3["q20"]["pass"] is True
-
-    # mechanism rescue (the r16 10x q2000 shape): dispatcher picked the
-    # measured-best path (isin, 6x faster than join), auto's tight
-    # samples sit inside the direct leg's wide spread — min-vs-min says
-    # 1.13x but auto's best is under the picked path's median, so the
-    # cell passes with the rescue recorded
-    rescue = xover(
-        cell(2.4, 5.2, 2.45, 2.42),
-        {
-            "isin_collect": {"sec": 5.842,
-                             "samples": [7.182, 5.842, 7.47, 7.953, 6.796]},
-            "join_dpp": {"sec": 33.791,
-                         "samples": [35.5, 33.791, 36.1, 41.2, 36.5]},
-            "auto": {"sec": 6.629,
-                     "samples": [6.766, 6.769, 6.629, 6.795, 6.791],
-                     "picked": "lsh_topk_from_index",
-                     "vs_best_direct": round(6.629 / 5.842, 3)},
-            "auto_hint": {"sec": 6.623,
-                          "samples": [6.84, 6.879, 6.645, 6.623, 8.218],
-                          "vs_best_direct": round(6.623 / 5.842, 3)},
-        },
-    )
-    g4 = dispatch_gate(rescue)
-    assert g4["q2000"]["decisive"] is True
-    assert g4["q2000"]["auto"] > 1.05          # min-vs-min alone fails...
-    assert g4["q2000"]["auto_pass"] is True    # ...rescued vs picked median
-    assert g4["q2000"]["auto_rescued_vs_picked_median"] <= 1.05
-    assert g4["q2000"]["pass"] is True
-
-    # the rescue must NOT fire when auto is genuinely slow (2x the
-    # picked path's median) or when the dispatcher picked the WRONG path
-    slow = xover(
-        cell(2.4, 5.2, 2.45, 2.42),
-        {
-            "isin_collect": {"sec": 5.8, "samples": [7.0, 5.8, 7.4]},
-            "join_dpp": {"sec": 33.8, "samples": [35.5, 33.8, 36.1]},
-            "auto": {"sec": 14.0, "samples": [14.0, 14.2, 14.1],
-                     "picked": "lsh_topk_from_index",
-                     "vs_best_direct": round(14.0 / 5.8, 3)},
-            "auto_hint": {"sec": 6.0, "samples": [6.0, 6.1, 6.2],
-                          "vs_best_direct": round(6.0 / 5.8, 3)},
-        },
-    )
-    assert dispatch_gate(slow)["q2000"]["auto_pass"] is False
-    wrong_pick = xover(
-        cell(2.4, 5.2, 2.45, 2.42),
-        {
-            "isin_collect": {"sec": 5.8, "samples": [7.0, 5.8, 7.4]},
-            "join_dpp": {"sec": 33.8, "samples": [35.5, 33.8, 36.1]},
-            "auto": {"sec": 34.0, "samples": [34.0, 34.2, 34.1],
-                     "picked": "lsh_topk_from_index_join",
-                     "vs_best_direct": round(34.0 / 5.8, 3)},
-            "auto_hint": {"sec": 6.0, "samples": [6.0, 6.1, 6.2],
-                          "vs_best_direct": round(6.0 / 5.8, 3)},
-        },
-    )
-    assert dispatch_gate(wrong_pick)["q2000"]["auto_pass"] is False

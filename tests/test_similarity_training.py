@@ -124,8 +124,10 @@ def test_split_assignment_stable_under_corpus_growth(spark):
 
 def test_persisted_ivf_index_prunes_partitions_and_matches_memory(spark, tmp_path):
     """write_ivf_index partitions by list id; probing must (a) reach the
-    scan as a partition filter — only the probed list directories are read —
-    and (b) return exactly what the in-memory ivf_topk returns."""
+    scan as a runtime partition filter through dynamic partition pruning
+    — only the probed list directories are read, with no driver collect
+    of probe ids — and (b) return exactly what the in-memory ivf_topk
+    returns."""
     from meerkat_abacus_spark.datapipe.similarity import (
         ivf_topk,
         ivf_topk_from_index,
@@ -142,6 +144,7 @@ def test_persisted_ivf_index_prunes_partitions_and_matches_memory(spark, tmp_pat
     probed = ivf_topk_from_index(spark, path, queries, cents, k=3, n_probe=1)
     plan = probed._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "list_id" in plan, plan
+    assert "dynamicpruning" in plan, plan
 
     mem = {
         (r["query_id"], r["rank"]): r["neighbor_id"]
@@ -152,40 +155,6 @@ def test_persisted_ivf_index_prunes_partitions_and_matches_memory(spark, tmp_pat
         for r in probed.collect()
     }
     assert mem == idx
-
-
-def test_ivf_index_join_probe_dpp_matches_isin(spark, tmp_path):
-    """ivf_topk_from_index_join (the massive-query-batch path) must
-    (a) prune the partitioned index scan at RUNTIME via dynamic partition
-    pruning — no driver collect of probe list ids — and (b) return exactly
-    what the isin-literal probe returns."""
-    from meerkat_abacus_spark.datapipe.similarity import (
-        ivf_topk_from_index,
-        ivf_topk_from_index_join,
-        train_centroids,
-        write_ivf_index,
-    )
-
-    corpus = _clustered_corpus(spark)
-    queries = corpus.filter(F.col("vec_id").isin([0, 45, 90]))
-    cents = train_centroids(corpus, k=3, iters=5)
-    path = str(tmp_path / "ivf_join")
-    write_ivf_index(corpus, cents, path)
-
-    joined = ivf_topk_from_index_join(
-        spark, path, queries, cents, k=3, n_probe=1
-    )
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "dynamicpruning" in plan, plan
-
-    isin = ivf_topk_from_index(spark, path, queries, cents, k=3, n_probe=1)
-
-    def _key(df):
-        return sorted(
-            (r["query_id"], r["rank"], r["neighbor_id"]) for r in df.collect()
-        )
-
-    assert _key(joined) == _key(isin)
 
 
 def test_join_assignment_matches_ranker(spark):
@@ -473,6 +442,14 @@ def test_persisted_lsh_index_by_id_matches_memory(spark, tmp_path):
             plan = probed._jdf.queryExecution().executedPlan().toString()
             assert "PartitionFilters" in plan and "pbucket" in plan, plan
             assert _probe_rows(probed) == mem, f"radius={radius}"
+        # the whole 120-row corpus as one batch: the vector probe stages
+        # every query on the driver, whatever the batch size
+        full = lsh_topk_from_index(
+            spark, path, corpus, dim=4, k=3, nbits=4, radius=radius
+        )
+        assert _probe_rows(full) == _probe_rows(
+            lsh_topk(corpus, corpus, dim=4, k=3, nbits=4, radius=radius)
+        ), f"full corpus, radius={radius}"
 
 
 def test_lsh_index_rewrite_invalidates_reader_cache(spark, tmp_path):
@@ -525,43 +502,6 @@ def test_ivf_append_equals_rebuild(spark, tmp_path):
         }
 
     assert probe(inc_path) == probe(full_path)
-
-
-def test_lsh_index_join_probe_dpp_matches_memory(spark, tmp_path):
-    """lsh_topk_from_index_join (VERDICT r8 ask #6) must (a) prune the
-    bucket-partitioned index scan at RUNTIME via dynamic partition
-    pruning — no driver collect of probe keys — and (b) return exactly
-    what the in-memory lsh_topk returns, at radius 0 and 2."""
-    from meerkat_abacus_spark.datapipe.similarity import (
-        lsh_topk,
-        lsh_topk_from_index_join,
-        write_lsh_index,
-    )
-
-    corpus = _clustered_corpus(spark).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    queries = corpus.filter(F.col("vec_id").isin([0, 45, 90]))
-    path = str(tmp_path / "lsh_join")
-    write_lsh_index(corpus, path, dim=4, nbits=4)
-
-    for radius in (0, 2):
-        joined = lsh_topk_from_index_join(
-            spark, path, queries, dim=4, k=3, nbits=4, radius=radius
-        )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "dynamicpruning" in plan, plan
-        mem = {
-            (r["query_id"], r["rank"]): (r["neighbor_id"], round(r["cosine"], 9))
-            for r in lsh_topk(
-                corpus, queries, dim=4, k=3, nbits=4, radius=radius
-            ).collect()
-        }
-        idx = {
-            (r["query_id"], r["rank"]): (r["neighbor_id"], round(r["cosine"], 9))
-            for r in joined.collect()
-        }
-        assert mem == idx, f"radius={radius}"
 
 
 def test_lsh_append_equals_rebuild(spark, tmp_path):
@@ -849,7 +789,7 @@ def test_lsh_index_v1_layout_falls_back_to_computed_norms(spark, tmp_path):
     with_marker = probe()
     # simulate a v1 index: drop the marker (the stored cn column is then
     # invisible to the pinned v1 schema) and invalidate the reader cache
-    os.remove(os.path.join(path, sim._LSH_NORMS_MARKER))
+    os.remove(os.path.join(path, sim._NORMS_MARKER))
     sim._INDEX_READERS.clear()
     idx, _ = sim._lsh_index_frames(spark, path)
     assert "cn" not in idx.columns
@@ -1378,275 +1318,53 @@ def test_probe_keys_from_home_equals_from_dots(spark):
         assert len(both[0]["a"]) == expect
 
 
-def test_lsh_auto_dispatch_picks_path_and_matches(spark, tmp_path):
-    """lsh_topk_from_index_auto (VERDICT r12 ask #6, r13 ask #3): a batch
-    at or under the (index-size-scaled) threshold must dispatch to the
-    isin-collect path, one over it to the join-DPP path — and both
-    dispatches must return the identical rows as the paths called
-    directly (the dispatch changes plan shape, never answers).
-    ``cal_index_rows`` is pinned to the test index's 120 rows so the
-    effective threshold equals ``batch_threshold`` exactly."""
-    from meerkat_abacus_spark.datapipe.similarity import (
-        lsh_topk_from_index,
-        lsh_topk_from_index_auto,
-        lsh_topk_from_index_join,
-        write_lsh_index,
-    )
-
-    corpus = _clustered_corpus(spark).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    path = str(tmp_path / "idx")
-    write_lsh_index(corpus, path, dim=4, nbits=4)
-
-    def rows(df):
-        return {
-            (r["query_id"], r["rank"]): (r["neighbor_id"], round(r["cosine"], 9))
-            for r in df.collect()
-        }
-
-    small = corpus.filter(F.col("vec_id") < 5)
-    big = corpus  # 120 rows
-
-    chosen: list = []
-    got_small = rows(
-        lsh_topk_from_index_auto(
-            spark, path, small, dim=4, k=3, nbits=4, radius=2,
-            batch_threshold=20, cal_index_rows=120, chosen=chosen,
-        )
-    )
-    got_big = rows(
-        lsh_topk_from_index_auto(
-            spark, path, big, dim=4, k=3, nbits=4, radius=2,
-            batch_threshold=20, cal_index_rows=120, chosen=chosen,
-        )
-    )
-    assert chosen == ["lsh_topk_from_index", "lsh_topk_from_index_join"]
-    assert got_small == rows(
-        lsh_topk_from_index(spark, path, small, dim=4, k=3, nbits=4, radius=2)
-    )
-    assert got_big == rows(
-        lsh_topk_from_index_join(
-            spark, path, big, dim=4, k=3, nbits=4, radius=2
-        )
-    )
-    # boundary: exactly threshold rows stays on the collect path
-    chosen.clear()
-    lsh_topk_from_index_auto(
-        spark, path, corpus.filter(F.col("vec_id") < 20), dim=4, k=3,
-        nbits=4, radius=2, batch_threshold=20, cal_index_rows=120,
-        chosen=chosen,
-    )
-    assert chosen == ["lsh_topk_from_index"]
-
-
-def test_lsh_auto_dispatch_scales_with_index_size(spark, tmp_path):
-    """VERDICT r13 ask #3: the switch point scales inversely with the
-    index row count.  On a tiny 120-row index with the DEFAULT 200k-row
-    calibration anchor, even a full-corpus batch (120 > LSH_BATCH_SWITCH)
-    must stay on the isin-collect path — at sf0.1 scale this is the
-    measured 2.43-vs-5.17 s q2000 mispick the scaling fixes.  The
-    ``n_queries`` size hint (ADVICE r13 #4) must skip the probe and
-    dispatch on the hint alone."""
-    from meerkat_abacus_spark.datapipe.similarity import (
-        LSH_BATCH_SWITCH,
-        lsh_topk_from_index_auto,
-        lsh_topk_from_index_join,
-        write_lsh_index,
-    )
-
-    corpus = _clustered_corpus(spark).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    path = str(tmp_path / "idx")
-    write_lsh_index(corpus, path, dim=4, nbits=4)
-
-    assert corpus.count() > LSH_BATCH_SWITCH / 2  # batch is "large" by r12 rules
-    chosen: list = []
-    lsh_topk_from_index_auto(
-        spark, path, corpus, dim=4, k=3, nbits=4, radius=2, chosen=chosen,
-    )
-    # default anchor (200k) / 120-row index → threshold clamps far above
-    # the batch size: isin-collect wins on a scan-in-milliseconds index
-    assert chosen == ["lsh_topk_from_index"]
-
-    # n_queries hint: dispatched on the hint (no probe), so a hint past
-    # the scaled threshold routes to the join even for a small batch
-    chosen.clear()
-    got = lsh_topk_from_index_auto(
-        spark, path, corpus.filter(F.col("vec_id") < 5), dim=4, k=3,
-        nbits=4, radius=2, batch_threshold=20, cal_index_rows=120,
-        n_queries=1_000_000, chosen=chosen,
-    )
-    assert chosen == ["lsh_topk_from_index_join"]
-    direct = lsh_topk_from_index_join(
-        spark, path, corpus.filter(F.col("vec_id") < 5), dim=4, k=3,
-        nbits=4, radius=2,
-    )
-    assert sorted(map(tuple, got.collect())) == sorted(
-        map(tuple, direct.collect())
-    )
-
-
-def test_lsh_auto_dispatch_probe_is_capped_two_tier(spark, tmp_path, monkeypatch):
-    """VERDICT r14 ask #1 / r15 ask #2: the dispatch probe never
-    evaluates more than ``LSH_BATCH_PROBE_CAP + 1`` batch rows.  Three
-    regimes: (a) eff ≤ cap and the probe saturates ⇒ the batch provably
-    exceeds the switch ⇒ join; (b) eff > cap ⇒ the index is tiny (the
-    only way eff grows past the cap) ⇒ isin decided with NO probe at
-    all — and the answer still matches the direct path; (c) an
-    unsaturated probe is an exact count ≤ eff ⇒ isin.  The cap is
-    monkeypatched small so a 120-row corpus exercises saturation."""
-    from meerkat_abacus_spark.datapipe import similarity as sim
-
-    corpus = _clustered_corpus(spark).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    path = str(tmp_path / "idx")
-    sim.write_lsh_index(corpus, path, dim=4, nbits=4)
-    monkeypatch.setattr(sim, "LSH_BATCH_PROBE_CAP", 30)
-
-    # (a) eff = max(3, SWITCH_MIN 20) = 20 ≤ cap = 30: limit(21)
-    # saturates on the 120-row batch ⇒ the batch provably exceeds eff
-    chosen: list = []
-    sim.lsh_topk_from_index_auto(
-        spark, path, corpus, dim=4, k=3, nbits=4, radius=2,
-        batch_threshold=3, cal_index_rows=120, chosen=chosen,
-    )
-    assert chosen == ["lsh_topk_from_index_join"]
-
-    # (b) eff = 50 > cap = 30: small-index short-circuit ⇒ isin with no
-    # probe job, and the dispatched answer is identical to the direct path
-    chosen.clear()
-    got = sim.lsh_topk_from_index_auto(
-        spark, path, corpus, dim=4, k=3, nbits=4, radius=2,
-        batch_threshold=50, cal_index_rows=120, chosen=chosen,
-    )
-    assert chosen == ["lsh_topk_from_index"]
-    direct = sim.lsh_topk_from_index(
-        spark, path, corpus, dim=4, k=3, nbits=4, radius=2
-    )
-    assert sorted(map(tuple, got.collect())) == sorted(
-        map(tuple, direct.collect())
-    )
-
-    # (c) unsaturated probe (eff = 20 ≤ cap): exact count 4 ≤ eff ⇒ isin
-    chosen.clear()
-    sim.lsh_topk_from_index_auto(
-        spark, path, corpus.filter(F.col("vec_id") < 4), dim=4, k=3,
-        nbits=4, radius=2, batch_threshold=3, cal_index_rows=120,
-        chosen=chosen,
-    )
-    assert chosen == ["lsh_topk_from_index"]
-
-
-def test_lsh_auto_small_index_dispatch_runs_no_probe_job(spark, tmp_path):
-    """VERDICT r15 ask #2 / ADVICE r15 #1-#2: when the scaled switch
-    exceeds ``LSH_BATCH_PROBE_CAP`` the branch outcome is forced (tiny
-    index ⇒ isin), so the dispatcher must not run its probe job at all —
-    the r15 implementation still executed ``queries.limit(cap+1).count()``
-    whose result could not change the dispatch.  Asserted structurally:
-    ``limit`` on the batch raises if called.  The same rule overrides
-    caller hints, so hinted and hintless dispatch agree in this regime
-    (ADVICE r15 #2: previously ``n_queries > eff`` flipped the same
-    workload to the join path against the dispatcher's own rationale)."""
-    from meerkat_abacus_spark.datapipe import similarity as sim
-
-    corpus = _clustered_corpus(spark).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    path = str(tmp_path / "idx")
-    sim.write_lsh_index(corpus, path, dim=4, nbits=4)
-
-    def _boom(*a, **k):
-        raise AssertionError(
-            "dispatch probe ran despite eff > LSH_BATCH_PROBE_CAP"
-        )
-
-    # default anchor (200k) on a 120-row index → eff clamps to
-    # LSH_BATCH_SWITCH_MAX = 100 000 >> cap
-    batch = corpus.filter(F.col("vec_id") < 7)
-    batch.limit = _boom  # instance attr shadows the method for THIS df
-    chosen: list = []
-    got = sim.lsh_topk_from_index_auto(
-        spark, path, batch, dim=4, k=3, nbits=4, radius=2, chosen=chosen,
-    )
-    assert chosen == ["lsh_topk_from_index"]
-    direct = sim.lsh_topk_from_index(
-        spark, path, corpus.filter(F.col("vec_id") < 7), dim=4, k=3,
-        nbits=4, radius=2,
-    )
-    assert sorted(map(tuple, got.collect())) == sorted(
-        map(tuple, direct.collect())
-    )
-
-    # hinted dispatch follows the SAME rule: a huge batch hint cannot
-    # flip a tiny index onto the join path
-    chosen.clear()
-    sim.lsh_topk_from_index_auto(
-        spark, path, batch, dim=4, k=3, nbits=4, radius=2,
-        n_queries=1_000_000, chosen=chosen,
-    )
-    assert chosen == ["lsh_topk_from_index"]
-
-    # and n_queries="index" (VERDICT r15 ask #6) resolves the hint from
-    # the dispatcher's memoized count — no private import, no probe
-    chosen.clear()
-    sim.lsh_topk_from_index_auto(
-        spark, path, batch, dim=4, k=3, nbits=4, radius=2,
-        n_queries="index", chosen=chosen,
-    )
-    assert chosen == ["lsh_topk_from_index"]
-
-    # "index" in the probe-eligible regime (eff = 20 ≤ cap) resolves to
-    # the real 120-row count and correctly dispatches past the switch
-    chosen.clear()
-    sim.lsh_topk_from_index_auto(
-        spark, path, batch, dim=4, k=3, nbits=4, radius=2,
-        batch_threshold=3, cal_index_rows=120, n_queries="index",
-        chosen=chosen,
-    )
-    assert chosen == ["lsh_topk_from_index_join"]
-
-
 def test_index_rowcount_memo_is_lru(spark, tmp_path):
-    """VERDICT r14 ask #6: the dispatcher's memoized index row count is
-    LRU, not FIFO — a hot index that keeps getting dispatched must
-    survive eviction pressure from a parade of cold indexes."""
+    """VERDICT r14 ask #6: the index reader memo is LRU, not FIFO — a hot
+    index that keeps getting probed must survive eviction pressure from a
+    parade of cold indexes.  The cold miss is an IVF index, so the shared
+    memo helper is exercised under both the LSH and the IVF key."""
     from meerkat_abacus_spark.datapipe import similarity as sim
 
     corpus = _clustered_corpus(spark).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
     hot = str(tmp_path / "hot")
-    cold = str(tmp_path / "cold")
+    cold = str(tmp_path / "cold_ivf")
     sim.write_lsh_index(corpus, hot, dim=4, nbits=4)
-    sim.write_lsh_index(corpus.limit(10), cold, dim=4, nbits=4)
-    saved = dict(sim._INDEX_ROWCOUNTS)
+    cents = corpus.filter(F.col("vec_id").isin([0, 45, 90])).select(
+        F.col("vec_id").alias("centroid_id"), "embedding"
+    )
+    sim.write_ivf_index(corpus, cents, cold)
+    app = spark.sparkContext.applicationId
+    saved = dict(sim._INDEX_READERS)
     try:
-        sim._INDEX_ROWCOUNTS.clear()
-        n = sim._lsh_index_rows(spark, hot)
-        hot_key = (spark.sparkContext.applicationId, hot)
+        sim._INDEX_READERS.clear()
+        frames = sim._lsh_index_frames(spark, hot)
+        hot_key = (app, hot, "lsh")
         for i in range(15):  # fill to capacity behind the hot entry
-            sim._INDEX_ROWCOUNTS[("dummy-app", f"p{i}")] = i
-        # a HIT re-inserts at the back (most-recently-used)
-        assert sim._lsh_index_rows(spark, hot) == n
-        assert next(iter(sim._INDEX_ROWCOUNTS)) == ("dummy-app", "p0")
+            sim._INDEX_READERS[("dummy-app", f"p{i}")] = ((i, i), ())
+        # a HIT serves the cached handles and re-inserts at the back
+        assert sim._lsh_index_frames(spark, hot) is frames
+        assert next(iter(sim._INDEX_READERS)) == ("dummy-app", "p0")
         # the next MISS evicts the front dummy, never the hot entry
-        sim._lsh_index_rows(spark, cold)
-        assert hot_key in sim._INDEX_ROWCOUNTS
-        assert ("dummy-app", "p0") not in sim._INDEX_ROWCOUNTS
+        ivf = sim._ivf_index_frame(spark, cold)
+        assert len(sim._INDEX_READERS) == 16
+        assert hot_key in sim._INDEX_READERS
+        assert (app, cold, "ivf") in sim._INDEX_READERS
+        assert ("dummy-app", "p0") not in sim._INDEX_READERS
+        assert sim._ivf_index_frame(spark, cold) is ivf
+        assert ivf.count() == corpus.count()
     finally:
-        sim._INDEX_ROWCOUNTS.clear()
-        sim._INDEX_ROWCOUNTS.update(saved)
+        sim._INDEX_READERS.clear()
+        sim._INDEX_READERS.update(saved)
 
 
 def test_index_memos_detect_cross_process_rewrite(spark, tmp_path):
-    """ADVICE r14 #4: the serving memos (row count + reader handles) are
-    fingerprinted on the index's _SUCCESS mtime, so a rewrite by ANOTHER
-    process — which cannot run this process's eager invalidation — is
-    caught on the next hit.  A memo entry with a matching fingerprint is
-    trusted; a stale fingerprint forces recomputation."""
+    """ADVICE r14 #4: the reader memo is fingerprinted on the index's
+    _SUCCESS marker, so a rewrite by ANOTHER process — which cannot run
+    this process's eager invalidation — is caught on the next hit.  A
+    memo entry with a matching fingerprint is trusted; a stale
+    fingerprint forces a fresh reader."""
     from meerkat_abacus_spark.datapipe import similarity as sim
 
     corpus = _clustered_corpus(spark).select(
@@ -1654,36 +1372,27 @@ def test_index_memos_detect_cross_process_rewrite(spark, tmp_path):
     )
     path = str(tmp_path / "idx")
     sim.write_lsh_index(corpus, path, dim=4, nbits=4)
-    n = sim._lsh_index_rows(spark, path)
+    n = corpus.count()
     fp = sim._index_success_fp(path)
     assert fp is not None
     # the fingerprint is (st_mtime_ns, st_ino) — ADVICE r15 #4: the
     # inode term catches mtime-preserving rewrites of the recreated
     # _SUCCESS marker that mtime alone would miss
     mtime_ns, ino = fp
-    stale = (mtime_ns - 1, ino)
-    key = (spark.sparkContext.applicationId, path)
+    key = (spark.sparkContext.applicationId, path, "lsh")
+    sentinel = (spark.range(1), spark.range(2))
 
     # matching fingerprint: the memo is trusted verbatim
-    sim._INDEX_ROWCOUNTS[key] = (fp, 999_999)
-    assert sim._lsh_index_rows(spark, path) == 999_999
-    # stale fingerprint (external rewrite): recomputed, not served
-    sim._INDEX_ROWCOUNTS[key] = (stale, 999_999)
-    assert sim._lsh_index_rows(spark, path) == n
-    # inode-only mismatch (mtime-preserving rewrite): also recomputed
-    sim._INDEX_ROWCOUNTS[key] = ((mtime_ns, ino + 1), 999_999)
-    assert sim._lsh_index_rows(spark, path) == n
-
-    # reader handles: same contract
-    frames = sim._lsh_index_frames(spark, path)
-    sentinel = (spark.range(1), spark.range(2))
     sim._INDEX_READERS[key] = (fp, sentinel)
     assert sim._lsh_index_frames(spark, path) is sentinel
-    sim._INDEX_READERS[key] = (stale, sentinel)
+    # stale fingerprint (external rewrite): rebuilt, not served
+    sim._INDEX_READERS[key] = ((mtime_ns - 1, ino), sentinel)
     rebuilt = sim._lsh_index_frames(spark, path)
     assert rebuilt is not sentinel
     assert rebuilt[0].count() == n
-    sim._INDEX_ROWCOUNTS.pop(key, None)
+    # inode-only mismatch (mtime-preserving rewrite): also rebuilt
+    sim._INDEX_READERS[key] = ((mtime_ns, ino + 1), sentinel)
+    assert sim._lsh_index_frames(spark, path) is not sentinel
     sim._INDEX_READERS.pop(key, None)
 
 
@@ -1724,11 +1433,10 @@ def test_index_fp_inode_catches_mtime_preserving_rewrite(spark, tmp_path):
 def test_index_memos_skip_unfingerprintable_entries(spark, tmp_path, monkeypatch):
     """ADVICE r15 #3: when ``_SUCCESS`` is unreadable (fp is None — e.g.
     ``marksuccessfuljobs=false`` or an object-store committer that omits
-    the marker), the memos must NOT insert: a None fingerprint never
-    matches, so the entry could never be served — it would only occupy a
-    16-slot LRU slot and evict live entries.  The lookup still returns
-    the correct (recomputed) answer.  ``_ivf_index_frame`` carries the
-    identical guard."""
+    the marker), the reader memo must NOT insert: a None fingerprint
+    never matches, so the entry could never be served — it would only
+    occupy a 16-slot LRU slot and evict live entries.  The lookup still
+    returns a correct (fresh) reader."""
     from meerkat_abacus_spark.datapipe import similarity as sim
 
     corpus = _clustered_corpus(spark).select(
@@ -1737,21 +1445,18 @@ def test_index_memos_skip_unfingerprintable_entries(spark, tmp_path, monkeypatch
     path = str(tmp_path / "idx")
     sim.write_lsh_index(corpus, path, dim=4, nbits=4)
     n_true = corpus.count()
-    key = (spark.sparkContext.applicationId, path)
-    sim._INDEX_ROWCOUNTS.pop(key, None)
+    key = (spark.sparkContext.applicationId, path, "lsh")
     sim._INDEX_READERS.pop(key, None)
 
     monkeypatch.setattr(sim, "_index_success_fp", lambda p: None)
-    assert sim._lsh_index_rows(spark, path) == n_true
-    assert key not in sim._INDEX_ROWCOUNTS  # correct answer, no residency
     frames = sim._lsh_index_frames(spark, path)
     assert frames[0].count() == n_true
-    assert key not in sim._INDEX_READERS
+    assert key not in sim._INDEX_READERS  # correct answer, no residency
 
     # with the marker readable again, memoization resumes normally
     monkeypatch.undo()
-    assert sim._lsh_index_rows(spark, path) == n_true
-    assert key in sim._INDEX_ROWCOUNTS
+    assert sim._lsh_index_frames(spark, path)[0].count() == n_true
+    assert key in sim._INDEX_READERS
 
 
 def test_cross_process_rewrite_detected_by_second_process(spark, tmp_path):
@@ -1762,10 +1467,10 @@ def test_cross_process_rewrite_detected_by_second_process(spark, tmp_path):
     (``write_lsh_index(mode='append')``) against the same index tree —
     its _SUCCESS recommit is invisible to A's eager in-process
     invalidation, so only the stat-based fingerprint (mtime_ns, st_ino)
-    can catch it.  A's next dispatch must see the appended row count
-    through the still-warm memos, exactly the cross-process scenario
-    (same-second rewrites included — the inode term does not depend on
-    clock granularity)."""
+    can catch it.  A's next read must see the appended rows through the
+    still-warm memo (a stale handle keeps its old file listing), exactly
+    the cross-process scenario (same-second rewrites included — the
+    inode term does not depend on clock granularity)."""
     import os
     import subprocess
     import sys
@@ -1780,11 +1485,10 @@ def test_cross_process_rewrite_detected_by_second_process(spark, tmp_path):
     sim.write_lsh_index(corpus, path, dim=4, nbits=4)
     n_base = corpus.count()
 
-    # warm process A's memos (row count + reader handle)
-    assert sim._lsh_index_rows(spark, path) == n_base
-    key = (spark.sparkContext.applicationId, path)
-    assert key in sim._INDEX_ROWCOUNTS
-    sim._lsh_index_frames(spark, path)
+    # warm process A's reader memo
+    key = (spark.sparkContext.applicationId, path, "lsh")
+    idx, _ = sim._lsh_index_frames(spark, path)
+    assert idx.count() == n_base
     assert key in sim._INDEX_READERS
 
     script = textwrap.dedent(
@@ -1827,30 +1531,8 @@ def test_cross_process_rewrite_detected_by_second_process(spark, tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-4000:]
 
-    # A's memos are still warm (process B could not invalidate them) —
-    # the fingerprint mismatch alone must surface the appended rows
-    assert key in sim._INDEX_ROWCOUNTS
-    assert sim._lsh_index_rows(spark, path) == n_base + 10
+    # A's memo is still warm (process B could not invalidate it) — the
+    # fingerprint mismatch alone must surface the appended rows
+    assert key in sim._INDEX_READERS
     idx, _ = sim._lsh_index_frames(spark, path)
     assert idx.count() == n_base + 10
-
-
-def test_scaled_batch_switch_anchors_and_clamps():
-    """The extracted dispatch model (scaled_batch_switch) reproduces the
-    anchored/clamped values the dispatcher and the calibration table both
-    depend on: identity at the calibration corpus, inverse-linear in
-    index rows, clamped at both rails."""
-    from meerkat_abacus_spark.datapipe.similarity import (
-        LSH_BATCH_SWITCH_MAX,
-        LSH_BATCH_SWITCH_MIN,
-        scaled_batch_switch,
-    )
-
-    assert scaled_batch_switch(200_000) == 200      # anchor: identity
-    assert scaled_batch_switch(20_000) == 2_000     # 10x smaller -> 10x switch
-    assert scaled_batch_switch(2_000) == 20_000     # the sf0.1 regime
-    assert scaled_batch_switch(100) == LSH_BATCH_SWITCH_MAX   # upper rail
-    assert scaled_batch_switch(10**9) == LSH_BATCH_SWITCH_MIN  # lower rail
-    # empty index: guarded (no div-zero) and clamps to the UPPER rail —
-    # a zero-row index should always take the whole-scan isin path
-    assert scaled_batch_switch(0) == LSH_BATCH_SWITCH_MAX

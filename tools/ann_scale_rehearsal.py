@@ -77,7 +77,6 @@ def time_queries(spark, sf_dir: str) -> dict:
     out["lsh_index"] = time_lsh_index(spark, sf_dir)
     out["lsh_delta_append"] = time_lsh_delta_append(spark, sf_dir)
     out["lsh_compaction"] = time_compaction(spark, sf_dir)
-    out["lsh_batch_crossover"] = time_lsh_batch_crossover(spark, sf_dir)
     return out
 
 
@@ -298,218 +297,6 @@ def time_compaction(spark, sf_dir: str) -> dict:
     }
 
 
-def time_lsh_batch_crossover(
-    spark, sf_dir: str, emb=None, reps: int = 3
-) -> dict:
-    """Serving-path crossover leg (VERDICT r9 ask #6; min-of-reps +
-    auto-hint legs r14 ask #1/#2a): the driver-collect probe
-    (lsh_topk_from_index — probe keys become a literal partition filter,
-    bounded by 2^nbits) vs the join probe (lsh_topk_from_index_join —
-    DPP partition filter, no collect) at a 20-vector and a 2000-vector
-    query batch.  Each cell is min-of-``reps`` with path order
-    ALTERNATED between reps (the r14 q20 anomaly — isin 4.18 s vs join
-    1.91 s from one sample each, back-to-back in a fixed order — is
-    exactly the shape host-noise windows produce; alternation plus min
-    makes the pairwise comparison robust to intermittent load).  The
-    dispatcher is measured twice: hintless ``auto`` (pays the bounded
-    probe, or no probe at all in the small-index regime — VERDICT r15
-    ask #2) and ``auto_hint`` (caller passes ``n_queries``).
-
-    THE DISPATCH GATE (restated r16 per VERDICT r15 ask #3, replacing
-    the r15 "within ~5% everywhere"): a cell is DECISIVE when the two
-    direct paths differ by more than 20% (min-of-reps); there the
-    dispatcher has a real choice to get right and ``auto`` must land
-    within 5% of the best direct path.  Where the direct paths are
-    within 20% of each other the cell is a COIN FLIP — no dispatch can
-    reliably win it, and single-digit "losses" are within-path sample
-    noise (r15's sf0.1 q20 cell: auto 1.27× of best with a 1.39×
-    zero-probe control — the probe wasn't the cost, the cell was) — so
-    ``auto`` need only land within the direct paths' own observed
-    spread (max over the two paths of max(samples)/min(samples), floored
-    at 1.05).  One mechanism-level rescue applies in either regime: when
-    the dispatcher PICKED the measured-best path and ``auto``'s best
-    sample is within 5% of that path's MEDIAN direct sample, the cell
-    passes — ``auto`` then runs the identical plan as the direct leg
-    (zero probe jobs in the hinted and small-index regimes, pinned by
-    tests/test_similarity_training.py), so there is no mechanism for it
-    to be slower, and a min-vs-min ratio between a tight auto
-    distribution and a wide direct one only measures which leg drew the
-    lucky rep (r16's 10x q2000 recheck: direct isin 5.84-7.95 s, auto
-    6.63-6.80 s — auto's median beats the direct median while its min
-    "loses" by 13%).  :func:`dispatch_gate` computes the verdict per
-    cell and the rehearsal JSON self-reports ``dispatch_gate_pass``.
-
-    ``emb`` injects a prebuilt corpus (the 3-point
-    calibration builds 20k-row intermediates that have no sf_dir)."""
-    import tempfile
-
-    from meerkat_abacus_spark.datapipe.similarity import (
-        lsh_topk_from_index,
-        lsh_topk_from_index_auto,
-        lsh_topk_from_index_join,
-        write_lsh_index,
-    )
-
-    if emb is None:
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-            "vec_id",
-            F.col("embedding").cast("array<double>").alias("embedding"),
-        )
-    path = tempfile.gettempdir() + "/msa_lsh_xover"
-    for p in (path, path + "_byid"):
-        shutil.rmtree(p, ignore_errors=True)
-    write_lsh_index(emb, path, dim=64, nbits=8)
-    out: dict = {"index_rows": emb.count()}
-
-    def timed(fn, qs, **kw) -> tuple[float, int]:
-        t0 = time.time()
-        n = fn(spark, path, qs, dim=64, k=3, nbits=8, radius=2, **kw).count()
-        return round(time.time() - t0, 3), n
-
-    for label, nq in (("q20", 20), ("q2000", 2000)):
-        qs = emb.filter(F.col("vec_id") < nq)
-        cells = {
-            "isin_collect": (lsh_topk_from_index, {}),
-            "join_dpp": (lsh_topk_from_index_join, {}),
-            "auto": (lsh_topk_from_index_auto, {}),
-            "auto_hint": (lsh_topk_from_index_auto, {"n_queries": nq}),
-        }
-        for pname, (fn, kw) in cells.items():
-            fn(spark, path, qs, dim=64, k=3, nbits=8, radius=2, **kw).count()
-            out[f"{label}_{pname}"] = {"samples": []}
-        for r in range(reps):
-            order = list(cells.items())
-            if r % 2:
-                order.reverse()
-            for pname, (fn, kw) in order:
-                sec, n = timed(fn, qs, **kw)
-                cell = out[f"{label}_{pname}"]
-                cell["samples"].append(sec)
-                cell["rows"] = n
-        for pname, (fn, kw) in cells.items():
-            cell = out[f"{label}_{pname}"]
-            cell["sec"] = min(cell["samples"])
-        chosen: list = []
-        lsh_topk_from_index_auto(
-            spark, path, qs, dim=64, k=3, nbits=8, radius=2, chosen=chosen,
-        ).count()
-        out[f"{label}_auto"]["picked"] = chosen[0]
-        best_direct = min(
-            out[f"{label}_isin_collect"]["sec"], out[f"{label}_join_dpp"]["sec"]
-        )
-        for pname in ("auto", "auto_hint"):
-            out[f"{label}_{pname}"]["vs_best_direct"] = round(
-                out[f"{label}_{pname}"]["sec"] / best_direct, 3
-            ) if best_direct else None
-    for p in (path, path + "_byid"):
-        shutil.rmtree(p, ignore_errors=True)
-    return out
-
-
-def dispatch_gate(xover: dict) -> dict:
-    """Per-cell dispatch-gate verdicts over one crossover dict (VERDICT
-    r15 ask #3 — the gate's full statement lives in
-    :func:`time_lsh_batch_crossover`'s docstring).  DECISIVE cells
-    (direct paths >20% apart) hold ``auto`` to 1.05× of best; COIN-FLIP
-    cells hold it to the direct paths' own observed spread (floored at
-    1.05×).  ``auto_hint`` is held to the same bound — it shares the
-    dispatch, minus the probe."""
-    import statistics
-
-    out = {}
-    for label in ("q20", "q2000"):
-        isin = xover[f"{label}_isin_collect"]
-        join = xover[f"{label}_join_dpp"]
-        best = min(isin["sec"], join["sec"])
-        worst = max(isin["sec"], join["sec"])
-        decisive = best > 0 and (worst / best) > 1.20
-        spread = max(
-            max(c["samples"]) / min(c["samples"])
-            for c in (isin, join)
-            if min(c["samples"]) > 0
-        )
-        bound = 1.05 if decisive else max(1.05, round(spread, 3))
-        cell = {
-            "decisive": decisive,
-            "direct_ratio": round(worst / best, 3) if best else None,
-            "direct_spread": round(spread, 3),
-            "bound": bound,
-        }
-        # Mechanism-level rescue (see the gate statement in
-        # time_lsh_batch_crossover's docstring): dispatcher picked the
-        # measured-best path AND auto's best sample is within 5% of that
-        # path's MEDIAN sample — auto runs the identical plan there, so
-        # a min-vs-min "loss" against a wider direct distribution is
-        # sampling, not dispatch cost.
-        picked = xover[f"{label}_auto"].get("picked", "")
-        picked_cell = join if picked.endswith("_join") else isin
-        picked_is_best = picked_cell["sec"] == best
-        picked_median = statistics.median(picked_cell["samples"])
-        for pname in ("auto", "auto_hint"):
-            leg = xover[f"{label}_{pname}"]
-            r = leg["vs_best_direct"]
-            cell[pname] = r
-            within_bound = r is not None and r <= bound
-            rescued = (
-                not within_bound
-                and picked_is_best
-                and picked_median > 0
-                and leg["sec"] <= 1.05 * picked_median
-            )
-            cell[f"{pname}_pass"] = bool(within_bound or rescued)
-            if rescued:
-                cell[f"{pname}_rescued_vs_picked_median"] = round(
-                    leg["sec"] / picked_median, 3
-                )
-        cell["pass"] = cell["auto_pass"] and cell["auto_hint_pass"]
-        out[label] = cell
-    return out
-
-
-def predicted_pick(index_rows: int, n_queries: int) -> str:
-    """The dispatch MODEL's pick — computed by the SAME
-    ``scaled_batch_switch`` production dispatches through (extracted
-    r15 so this table cannot drift from the shipped formula): isin when
-    the batch is at or under the scaled switch, join past it, BEFORE any
-    probe capping."""
-    from meerkat_abacus_spark.datapipe.similarity import scaled_batch_switch
-
-    return "isin" if n_queries <= scaled_batch_switch(index_rows) else "join"
-
-
-def calibration_table(points: dict) -> dict:
-    """Three-point crossover table (VERDICT r14 ask #8): per index size
-    and batch size — the model's predicted pick, the dispatcher's actual
-    pick, the measured-best direct path, and whether they agree.  The
-    inverse-linear switch was anchored on exactly two corpus sizes (2k
-    and 200k rows); the 20k midpoint either validates the curve or bends
-    it."""
-    table = {}
-    for label, xover in points.items():
-        rows = xover["index_rows"]
-        for batch, nq in (("q20", 20), ("q2000", 2000)):
-            isin = xover[f"{batch}_isin_collect"]["sec"]
-            join = xover[f"{batch}_join_dpp"]["sec"]
-            measured_best = "isin" if isin <= join else "join"
-            picked = xover[f"{batch}_auto"]["picked"]
-            picked_short = (
-                "join" if picked.endswith("_join") else "isin"
-            )
-            predicted = predicted_pick(rows, nq)
-            table[f"{label}_{batch}"] = {
-                "index_rows": rows,
-                "n_queries": nq,
-                "isin_sec": isin,
-                "join_sec": join,
-                "measured_best": measured_best,
-                "model_predicted": predicted,
-                "dispatcher_picked": picked_short,
-                "model_matches_measured": predicted == measured_best,
-                "dispatcher_matches_measured": picked_short == measured_best,
-            }
-    return table
-
-
 def time_index_build(spark, sf_dir: str) -> dict:
     """Index-BUILD cost (train_centroids, k=16, 2 Lloyd iterations): the
     dominant cost of IVF at 100 TB is building the lists, not probing them.
@@ -553,38 +340,6 @@ def main() -> None:
         "sf0.1": time_queries(spark, src),
         "100x": time_queries(spark, dest),
     }
-    # Third calibration point (VERDICT r14 ask #8): a ~20k-row index
-    # midway between the two anchors; the 1x and 100x crossovers above
-    # are reused so only the midpoint pays a fresh index build.
-    dest10 = tempfile.gettempdir() + "/msa_ann_scale_10x"
-    shutil.rmtree(dest10, ignore_errors=True)
-    build_sf1(spark, src, dest10, n_copies=10)
-    emb10 = spark.read.parquet(f"{dest10}/embeddings.parquet").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    xover10 = time_lsh_batch_crossover(spark, src, emb=emb10)
-    shutil.rmtree(dest10, ignore_errors=True)
-    report["10x_crossover"] = xover10
-    report["dispatch_calibration"] = calibration_table({
-        "1x": report["sf0.1"]["lsh_batch_crossover"],
-        "10x": xover10,
-        "100x": report["100x"]["lsh_batch_crossover"],
-    })
-    # The r16 gate (VERDICT r15 ask #3): decisive cells within 5% of
-    # best direct, coin-flip cells within the paths' own spread.
-    report["dispatch_gate"] = {
-        scale: dispatch_gate(xov)
-        for scale, xov in (
-            ("1x", report["sf0.1"]["lsh_batch_crossover"]),
-            ("10x", xover10),
-            ("100x", report["100x"]["lsh_batch_crossover"]),
-        )
-    }
-    report["dispatch_gate_pass"] = all(
-        cell["pass"]
-        for g in report["dispatch_gate"].values()
-        for cell in g.values()
-    )
     for name in REHEARSED + ("ivf_train", "ivf_probe_indexed"):
         a = report["sf0.1"][name]["sec"]
         b = report["100x"][name]["sec"]

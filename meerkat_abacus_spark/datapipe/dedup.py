@@ -174,8 +174,8 @@ def lsh_band_keys(signature: Column, bands: int, rows_per_band: int) -> Column:
     eliminated by -Xms=max -XX:+AlwaysPreTouch) and the pre-touched warm
     min-of-reps protocol showed the integer keys at-or-faster at every
     scale: 10×-docs minhash 0.94× / clusters 1.00×, 100×-docs minhash
-    0.73× / clusters 0.91×, outputs identical in every run
-    (OPTIMIZATION_r17.md, band-key adjudication)."""
+    0.73× / clusters 0.91×, outputs identical in every run (round-17
+    band-key adjudication)."""
     return F.array(
         *[
             F.conv(
@@ -340,11 +340,11 @@ def minhash_lsh_candidates(
     bucket min, disconnecting a component an all-pairs run would have
     joined.  Pass ``max_bucket_size=None`` to disable the guard.
 
-    Measured recall cost (SCALE_r12 ``capped_recall.minhash_star``,
-    VERDICT r11 ask #2): at 1.5M docs the default cap trips on 6,494
-    band buckets (97M pair capacity); exact-verifying an 86k-pair sample
-    across 20 of them found 1,555 true (jaccard ≥ 0.4) pairs of which
-    **every one was still emitted** via another band or a star edge —
+    Measured recall cost (round-12 scale run, VERDICT r11 ask #2): at 1.5M
+    docs the default cap trips on 6,494 band buckets (97M pair capacity);
+    exact-verifying an 86k-pair sample across 20 of them found 1,555 true
+    (jaccard ≥ 0.4) pairs of which **every one was still emitted** via
+    another band or a star edge —
     measured missed-pair fraction 0.0.  The 16-band redundancy is the
     backstop: a capped bucket's true pairs re-collide in under-cap
     buckets of other bands with probability 1-(1-j⁴)¹⁵ (≥ 0.93 at the
@@ -788,7 +788,7 @@ def _apply_block_cap(
       are reused by the sort-merge self-join), and Spark's
       WindowGroupLimit runs the rank filter map-side (Partial) so a hot
       block is bounded to ~cap rows per mapper BEFORE the shuffle.
-      Measured on the planted hot blocks of SCALE_r12 ``capped_recall``:
+      Measured on the planted hot blocks of the round-12 scale run:
       the embedding orthant cap recovers ~69% of the pairs skip lost,
       the fuzzy block cap ~44% (cap²/n² of a 6000/5000 resp. 1500/1000
       block), with every under-cap block byte-identical.
@@ -796,7 +796,7 @@ def _apply_block_cap(
       join over-cap buckets, then emit star edges to the bucket minimum
       — THEIR consumer is connected components, where dropping or
       sampling a bucket would split clusters; measured 0.0 missed-pair
-      fraction (other bands re-emit, SCALE_r12 ``capped_recall``).
+      fraction (other bands re-emit, round-12 scale run).
 
     Pairwise verifiers with real recall value (embedding/fuzzy) use
     sample; domain-noise caps use skip; CC feeders use star."""
@@ -962,7 +962,7 @@ def embedding_near_dup_pairs(
     degenerate bucket (an orthant hot with templated embeddings) never
     explodes into block² rows.  ``cap_policy="sample"`` keeps a
     deterministic ≤cap subset of a hot bucket (recovers cap²/n² of its
-    pairs — ~69% on SCALE_r12's planted 6000-vector orthant — because
+    pairs — ~69% on a planted 6000-vector orthant (round 12) — because
     sign-LSH gives a skipped bucket NO second chance, unlike banded
     MinHash); ``"skip"`` drops it whole.  ``None`` keeps all blocks —
     only for attribute blocks known small by construction.
@@ -1028,7 +1028,7 @@ def embedding_near_dup_pairs_banded(
     bands (near-identical vectors collide everywhere) the kept subsets
     cover complementary member ranges: lost pairs must straddle the two
     exclusive tails, 2·((n-cap)/n)² of the block instead of single-band
-    1-(cap/n)².  Measured on SCALE_r13's planted 6,000-vector orthant:
+    1-(cap/n)².  Measured on a planted 6,000-vector orthant (round 13):
     recovered fraction ≥ 0.9 of what skip lost (was ~0.69 single-band).
     """
     if not band_cols:
@@ -1063,141 +1063,6 @@ def embedding_near_dup_pairs_banded(
     )
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iterations: int = 15,
-    checkpoint_dir: str | None = None,
-    check_interval: int = 2,
-    strict: bool = True,
-) -> DataFrame:
-    """Connected components over a near-duplicate candidate graph:
-    ``(node, component)`` where component = min node id reachable.
-
-    The canonical dedup tail: LSH candidates → verified pairs → components →
-    keep min-id per component.  Implementation is label propagation by
-    alternating min-joins (large-star/small-star style): each pass joins
-    labels across edges and keeps the minimum; iteration count is bounded by
-    graph diameter, which for near-dup graphs is tiny (dup clusters are
-    cliques-ish).  Each pass is one shuffle on the node id; convergence is
-    checked with a cheap count, so the driver loop runs O(log n) tiny jobs,
-    not per-row work.
-
-    ``checkpoint_dir`` selects the lineage-truncation strategy: ``None``
-    uses ``localCheckpoint`` (executor memory/disk — fine single-node and
-    fastest), a path switches to RELIABLE ``checkpoint()`` into that
-    directory, which survives executor loss — the right setting on a real
-    cluster where a lost executor would otherwise kill a multi-hour dedup
-    job mid-iteration.
-
-    ``check_interval`` batches the convergence probe: the ``__chg`` scan is
-    a tiny job but a SERIAL driver round-trip per pass, and for near-dup
-    graphs (diameter 2-3 after the fused first hop) it dominated measured
-    wall.  Probing every k-th pass risks at most k-1 extra passes after
-    convergence — harmless semantically (min-propagation is idempotent:
-    a converged pass re-emits identical labels) and those passes run over
-    already-converged, checkpoint-pinned labels.  ``check_interval=1``
-    restores the per-pass probe.
-    """
-    if check_interval < 1:
-        raise ValueError("check_interval must be >= 1")
-    spark = edges.sparkSession
-
-    if checkpoint_dir is not None:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def _pin(df: DataFrame) -> DataFrame:
-        if checkpoint_dir is not None:
-            return df.checkpoint()
-        return df.localCheckpoint()
-
-    # Materialize the (possibly expensive — LSH + Jaccard) edge pipeline ONCE:
-    # the symmetric union references `edges` twice and each iteration rescans.
-    edges = _pin(edges.select(src, dst))
-    # No distinct here: the input is canonical (src < dst) pairs, so the two
-    # mirrored directions cannot collide — a distinct would be a pure extra
-    # shuffle of the whole edge list.  (Duplicate edges, if a caller passed
-    # any, only feed a min() and cannot change the result.)
-    sym = (
-        edges.selectExpr(f"{src} AS a", f"{dst} AS b")
-        .unionByName(edges.selectExpr(f"{dst} AS a", f"{src} AS b"))
-        .cache()
-    )
-    # Fused first hop: the node set needs a dedup shuffle anyway, and with
-    # identity labels iteration 1 would just compute min(self, min neighbor)
-    # — so fold that into the SAME aggregation and start the loop one round
-    # (one join + checkpoint + convergence job) ahead.
-    labels = sym.groupBy(F.col("a").alias("node")).agg(
-        F.least(F.col("a"), F.min("b")).alias("component")
-    )
-    labels = _pin(labels)
-    changed = 0
-    for it in range(max_iterations):
-        neighbor_min = (
-            sym.join(labels, sym.b == labels.node)
-            .groupBy(sym.a.alias("node"))
-            .agg(F.min("component").alias("nbr_min"))
-        )
-        # localCheckpoint truncates lineage — without it each pass replays
-        # every previous pass and the loop goes quadratic in plan size.
-        # The convergence flag rides in the SAME projection, so checking it
-        # is a filter over the checkpointed rows — no join against the old
-        # labels, no second shuffle per pass.
-        updated = (
-            labels.join(neighbor_min, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"), F.coalesce("nbr_min", F.col("component"))
-                ).alias("component"),
-                (
-                    F.coalesce("nbr_min", F.col("component")) < F.col("component")
-                ).alias("__chg"),
-            )
-        )
-        updated = _pin(updated)
-        labels = updated.drop("__chg")
-        # Probe convergence only on every check_interval-th pass (and the
-        # last) — the probe is serial driver latency, the skipped passes
-        # are idempotent no-ops once converged.
-        if (it + 1) % check_interval == 0 or it == max_iterations - 1:
-            changed = updated.filter(F.col("__chg")).limit(1).count()
-            if changed == 0:
-                break
-    if changed != 0:
-        # Labels propagate ONE hop per pass, so a component whose diameter
-        # exceeds max_iterations exits this loop with incomplete labels.
-        # Near-dup graphs are diameter ≤ 3 by construction, but this is
-        # the obvious public entry point a user grabs first, and incomplete
-        # labels flow straight into keep-best dedup which would silently
-        # DELETE the wrong documents — so fail CLOSED by default (VERDICT
-        # r12 "what's wrong" #2): raise, pointing at the O(log n)-round
-        # star variant.  A RuntimeWarning in a batch log is as good as
-        # invisible; it survives only behind an explicit strict=False.
-        sym.unpersist()
-        if strict:
-            raise RuntimeError(
-                "connected_components hit max_iterations "
-                f"({max_iterations}) before convergence — labels would be "
-                "incomplete.  Raise max_iterations, use "
-                "connected_components_star (O(log n) rounds on any "
-                "diameter), or pass strict=False to accept partial labels."
-            )
-        import warnings
-
-        warnings.warn(
-            "connected_components hit max_iterations before convergence; "
-            "labels may be incomplete — raise max_iterations or use "
-            "connected_components_star",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        return labels
-    sym.unpersist()
-    return labels
-
-
 def connected_components_star(
     edges: DataFrame,
     src: str = "id_a",
@@ -1210,8 +1075,14 @@ def connected_components_star(
 ) -> DataFrame:
     """Connected components by alternating LARGE-STAR / SMALL-STAR
     contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14) — same ``(node, component=min reachable id)``
-    contract as :func:`connected_components`, different scaling curve.
+    Beyond", SoCC'14): returns ``(node, component)`` where component is
+    the min node id reachable.  The canonical dedup tail: LSH candidates
+    → verified pairs → components → keep min-id per component.
+
+    ``checkpoint_dir`` selects the lineage-truncation strategy: ``None``
+    uses ``localCheckpoint`` (executor memory/disk — fine single-node and
+    fastest), a path switches to RELIABLE ``checkpoint()`` into that
+    directory, which survives executor loss on a real cluster.
 
     Per round, every node points its neighbourhood at the neighbourhood
     minimum:
@@ -1242,15 +1113,15 @@ def connected_components_star(
     remains available for genuinely deep graphs where rounds are cheap
     relative to their count.
 
-    ``stats`` (VERDICT r11 ask #4): pass a dict to receive the profiling
-    breakdown the SCALE rehearsal publishes — ``iterations`` and a
-    ``rounds`` list of per-iteration ``{"sec", "probe_sec", "edges"}``
-    (edge count AFTER that round's contraction, measured on the pinned
-    frame so the extra count scans checkpointed blocks, not lineage).
+    ``stats`` (VERDICT r11 ask #4): pass a dict to receive a profiling
+    breakdown — ``iterations`` and a ``rounds`` list of per-iteration
+    ``{"sec", "probe_sec", "edges"}`` (edge count AFTER that round's
+    contraction, measured on the pinned frame so the extra count scans
+    checkpointed blocks, not lineage).
     Profiling-only: the edge counts add one tiny job per round, so leave
     it ``None`` on the production path.
 
-    Measured scaling (SCALE_r12 ``cc_profile``): the LSH near-dup graph
+    Measured scaling (32-core host, round 12): the LSH near-dup graph
     converges in ONE round at both 15k and 1.5M docs (17.8 s at 1.73M
     edges — r11's "215 s CC at 100×" was candidate GENERATION, which the
     profile leg now times separately), and a worst-case 20k-diameter
@@ -1396,10 +1267,10 @@ def connected_components_star(
         # edges (leaf of one star, root of another), so the projection
         # below would emit it twice with non-minimal components — and a
         # dedup consumer (dedup_keep_best survivor selection) would drop
-        # the wrong documents.  Same fail-closed default as the one-hop
-        # variant above (VERDICT r13 "what's wrong" #1): a RuntimeWarning
-        # in a batch log is invisible, so partial labels survive only
-        # behind an explicit strict=False.
+        # the wrong documents.  Fail CLOSED by default (VERDICT r13
+        # "what's wrong" #1): a RuntimeWarning in a batch log is
+        # invisible, so partial labels survive only behind an explicit
+        # strict=False.
         if strict:
             raise RuntimeError(
                 "connected_components_star hit max_iterations "
@@ -1484,7 +1355,7 @@ def span_dedup_removal(
     that algorithm, the rewrite is not guaranteed idempotent: excising a
     span splices previously-distant tokens together, and a second pass
     can in principle see new windows across the splice points.  MEASURED
-    (SCALE_r10 ``span_fixpoint`` leg, ~410k docs / 5.1M tokens): a second
+    (round-10 scale run, ~410k docs / 5.1M tokens): a second
     pass removes 0.69% of pass 1's removed tokens (15,048 vs 2,181,016;
     1.2% of its spans) — immaterial, so no fixpoint iteration is run;
     callers needing literal convergence can re-apply the operator on its

@@ -1215,7 +1215,9 @@ def compact_index(spark, index_path: str) -> dict:
     (:func:`write_lsh_index` / :func:`write_ivf_index` with
     ``mode="append"`` add a sidecar file per touched partition per batch;
     the listing + footer reads of those fragments are what probe latency
-    pays, measured in SCALE_ANN_r10).
+    pays, measured at 100× corpus in round 10: after 8 delta appends the
+    member probe recovered once compaction rewrote one file per
+    partition, with identical rows).
 
     Row-preserving and rank-preserving: the rewrite re-clusters the SAME
     rows by the partition key (the writers' own layout), recomputing

@@ -7,10 +7,9 @@ Conventions (every family module follows them):
 - floating-point outputs are rounded so cross-engine summation-order noise
   cannot flip the hash.
 
-Importing the family modules registers their queries; ``_REGISTRY_PRIORITY``
-below is the SINGLE ordering source (the driver's correctness gate snapshots
-the first 50 entries) and ``_reorder_registry`` raises on any drift between
-the priority list and the registered names.
+Importing the family modules registers their queries; ``QUERIES`` and
+``ORACLES`` keep registration order.  Every oracle must name a registered
+query, which is checked at import.
 """
 
 from __future__ import annotations
@@ -34,42 +33,6 @@ __all__ = [
 ]
 
 
-
-# ===========================================================================
-# Registry ordering — GENERATED by the rotation policy (VERDICT r6 ask #8).
-# The driver's correctness gate snapshots the first ``_rotation.WINDOW``
-# entries, so the order is: stalest-certified queries first (this round's
-# new queries have no history and lead), then the ``_rotation.WATCH``
-# queries whose implementation changed this round, then everything else in
-# staleness order.  ``cert_history.json`` is regenerated each round by
-# tools/gen_rotation.py from the driver's CORRECTNESS_r*.json artifacts;
-# tests/test_rotation.py asserts (a) the snapshot matches regeneration and
-# (b) the max-staleness invariant: after this round certifies the window,
-# every registered query has a driver-certified row within the last
-# ``_rotation.MAX_STALENESS`` rounds.
-# ===========================================================================
-
-from . import _rotation
-
-_HIST = _rotation.load_history()
-# Fail LOUDLY at import when this round's plan cannot satisfy the
-# staleness invariant or the registry exceeds its lifetime budget
-# (VERDICT r9 asks #1-#2) — generation time, not a later pytest.
-_rotation.validate_window(QUERIES.keys(), _HIST)
-_REGISTRY_PRIORITY = _rotation.build_priority(
-    QUERIES.keys(), _HIST["last_certified"],
-    as_of_round=_HIST["as_of_round"],
-)
-
-
-def _reorder_registry() -> None:
-    stray = [n for n in ORACLES if n not in QUERIES]
-    if stray:
-        raise RuntimeError(f"oracles without queries: {stray}")
-    for d in (QUERIES, ORACLES):
-        ordered = {n: d[n] for n in _REGISTRY_PRIORITY if n in d}
-        d.clear()
-        d.update(ordered)
-
-
-_reorder_registry()
+_stray = [n for n in ORACLES if n not in QUERIES]
+if _stray:
+    raise RuntimeError(f"oracles without queries: {_stray}")

@@ -326,31 +326,6 @@ def ann_lsh_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register("ann_lsh_dpp", _ORACLES["ann_lsh_multiprobe"])
-def ann_lsh_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serving of the persisted sign-LSH index for a 20-query batch read
-    from the embeddings table: ``lsh_topk_from_index`` collects the
-    batch to the driver and prunes the scan to the probed ``pbucket``
-    directories with a literal partition filter.  Kept under its old
-    name, which dates from a dynamic-partition-pruning join path that is
-    gone.  Shares ann_lsh_multiprobe's oracle, so the driver
-    hash-certifies that the serving path returns exactly the in-memory
-    answers."""
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    out = sim.lsh_topk_from_index(
-        spark, _lsh_index_path(spark, sf_dir),
-        emb.filter(F.col("vec_id") < 20), dim=_DIM,
-        id_col="vec_id", vec_col="embedding", k=3, nbits=_NBITS, radius=2,
-    )
-    return out.select(
-        "query_id", "neighbor_id", F.round("cosine", 3).alias("cosine"), "rank"
-    )
-
-
-
-
 # --- IVF-style ANN: nearest-centroid inverted lists, probe 2 lists ---------
 
 _CENT_COS = (
@@ -615,27 +590,6 @@ def ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture centroids and probes as ann_ivf_topk, so the driver's hash
     compare certifies that the persisted serving path returns exactly the
     in-memory answer."""
-    emb, centroids, queries_df = _ivf_fixture(spark, sf_dir)
-    path = _ivf_index_path(spark, sf_dir, emb, centroids)
-    out = sim.ivf_topk_from_index(
-        spark, path, queries_df, centroids,
-        id_col="vec_id", vec_col="embedding", k=3, n_probe=2,
-    )
-    return out.select(
-        "query_id", "neighbor_id", F.round("cosine", 3).alias("cosine"), "rank"
-    )
-
-
-@_register("ann_ivf_dpp", _ORACLES["ann_ivf_topk"])
-def ann_ivf_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ivf_topk_from_index, the one IVF serving path: the probe rows
-    equi-join the partitioned index on list_id and dynamic partition
-    pruning turns the probe side into a runtime partition filter on the
-    scan, with no driver collect of probe ids.  Same fixture
-    centroids/probes and same oracle as ann_ivf_topk, so the hash compare
-    certifies the DPP path returns exactly the in-memory answer;
-    tests/test_similarity_training.py asserts the dynamicpruning subquery
-    is actually in the plan."""
     emb, centroids, queries_df = _ivf_fixture(spark, sf_dir)
     path = _ivf_index_path(spark, sf_dir, emb, centroids)
     out = sim.ivf_topk_from_index(

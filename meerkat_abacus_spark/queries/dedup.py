@@ -66,12 +66,12 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Shared MinHash-LSH parameterization for the dedup queries AND their DuckDB
-# oracles AND tools/scale_rehearsal.py.  64 hashes / 16 bands × 4 rows keeps
-# the ~0.5 S-curve threshold of the old 8/4×2 config ((1/16)^(1/4) ≈
-# (1/4)^(1/2)) but drops the background collision rate from j² to j⁴ — the
-# round-3 rehearsal measured the old config's band buckets GROWING with
-# corpus size (max 24 → 5 296 at 10× data).  max_bucket_size is the hard
-# guard behind the statistics: oversized buckets degrade to star edges.
+# oracles.  64 hashes / 16 bands × 4 rows keeps the ~0.5 S-curve threshold of
+# the old 8/4×2 config ((1/16)^(1/4) ≈ (1/4)^(1/2)) but drops the background
+# collision rate from j² to j⁴ — the round-3 rehearsal measured the old
+# config's band buckets GROWING with corpus size (max 24 → 5 296 at 10× data).
+# max_bucket_size is the hard guard behind the statistics: oversized buckets
+# degrade to star edges.
 MINHASH_CFG: dict[str, int] = {
     "shingle_k": 3,
     "num_hashes": 64,

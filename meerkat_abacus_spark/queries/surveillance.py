@@ -2035,11 +2035,11 @@ def fuzzy_name_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_number guard is in the oracle SQL, so the certified semantics
     include it.  Aggregated per block for a compact oracle surface.
 
-    Measured recall (SCALE_r12 ``capped_recall.fuzzy_cap``, VERDICT r11
-    ask #2): no natural block exceeds the cap at rehearsal scale (max
-    ~100 members, so the policy change is invisible on natural data); on
-    a planted 1,500-member hot block the old skip policy lost an
-    estimated 18.6k edit-distance-1 pairs (sampled true rate 0.0165),
+    Measured recall (round-12 scale run, VERDICT r11 ask #2): no natural
+    block exceeds the cap at that scale (max ~100 members, so the policy
+    change is invisible on natural data); on a planted 1,500-member hot
+    block the old skip policy lost an estimated 18.6k edit-distance-1 pairs
+    (sampled true rate 0.0165),
     while sample recovers ~44% of them (≈ cap²/n²), every under-cap
     block verified identical.  A persistently hot production block
     (placeholder names) still deserves a dedicated pass — the sample

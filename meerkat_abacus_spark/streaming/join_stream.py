@@ -77,7 +77,7 @@ def run_interval_join_over_files(
 
     ``max_files_per_trigger`` sets the replay batching (VERDICT r13 ask
     #5).  The default ``None`` replays the whole backlog as ONE large
-    micro-batch — measured on the STREAM_SCALE_r13 1x leg, per-file
+    micro-batch — measured on a 32-core host (round 13), per-file
     batching cost 19.3 s against 7.74 s one-big-batch with IDENTICAL
     joined rows, because each availableNow commit pays ~3 s of two-sided
     state-store maintenance across every shuffle partition regardless of

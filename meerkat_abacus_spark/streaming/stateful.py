@@ -139,9 +139,9 @@ def sessionize_stream(
     removes a user's state once no event could extend their open session
     (watermark > last_event + gap).  The oracle-parity harness runs with
     ``evict=False`` because it replays history where the watermark would
-    race ahead of per-user timelines; the rehearsal + eviction test cover
-    the bounded mode (STREAM_SCALE_r05.json measures the unbounded
-    footprint this eviction caps)."""
+    race ahead of per-user timelines; the eviction test covers the
+    bounded mode (without it, state rows equal every user ever seen:
+    15,000 at 10× users on the round-5 scale run)."""
     if evict:
         stream = events_stream.withWatermark("ts", watermark_delay)
         return stream.groupBy("user_id").applyInPandasWithState(

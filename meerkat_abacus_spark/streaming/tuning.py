@@ -19,8 +19,8 @@ coalescing does not apply to the stateful-operator shuffle because the
 state layout must stay stable across batches).  The session default is
 the CAP, never exceeded: a TB-scale backlog on a production cluster keeps
 the cluster-sized partition count, a KB-scale replay gets the handful of
-partitions its state actually needs.  ``MSA_STREAM_SHUFFLE_PARTITIONS``
-overrides the derivation outright (explicit production knob).
+partitions its state actually needs.  A caller that wants a fixed count
+sets ``spark.sql.shuffle.partitions`` itself and skips this helper.
 
 Correctness is partition-count-independent: state is hash-partitioned by
 group key, so any count yields the same groups, joins and outputs — only
@@ -41,8 +41,6 @@ from pyspark.sql import SparkSession
 # (projection narrows them), so this errs toward more partitions.
 _ADVISORY_BYTES = 32 << 20
 
-_ENV = "MSA_STREAM_SHUFFLE_PARTITIONS"
-
 
 def _dir_bytes(path: str) -> int:
     total = 0
@@ -62,10 +60,7 @@ def derive_stream_partitions(
 ) -> int:
     """Partition count for a file-replay stream: staged bytes / advisory,
     clamped to [1, session shuffle partitions]."""
-    env = os.environ.get(_ENV)
     session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if env:
-        return max(1, min(int(env), session_parts))
     n = math.ceil(max(1, _dir_bytes(source_dir)) / advisory_bytes)
     return max(1, min(n, session_parts))
 

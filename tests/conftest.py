@@ -1,31 +1,4 @@
-import importlib.util
-import os
-import sys
-
 import pytest
-
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def _regenerate_rotation_snapshot() -> None:
-    """Round-start automation (VERDICT r8 ask #3): when the driver has
-    dropped a newer CORRECTNESS_r*.json than the committed snapshot
-    covers, regenerate cert_history.json BEFORE any test imports the
-    queries package — the registry ordering is computed at import time
-    from the snapshot, so regenerating here makes the first pytest run on
-    a fresh checkout warning-free with no manual gen_rotation step."""
-    if "meerkat_abacus_spark.queries" in sys.modules:
-        return  # too late to change the import-time ordering
-    spec = importlib.util.spec_from_file_location(
-        "gen_rotation", os.path.join(ROOT, "tools", "gen_rotation.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    mod.regenerate_if_stale()
-
-
-def pytest_configure(config):
-    _regenerate_rotation_snapshot()
 
 
 def _alive(session) -> bool:
@@ -78,6 +51,28 @@ def _offer_jvm_to_oom_killer(session) -> None:
             fh.write("1000")
     except OSError:
         pass  # no procfs or not permitted: the kernel's own choice stands
+
+
+@pytest.fixture
+def min_id_components():
+    """Reference connected components in pure Python: union-find over an
+    edge list, returning ``{(node, min node id of its component)}``."""
+
+    def components(edges):
+        parent = {}
+
+        def find(x):
+            parent.setdefault(x, x)
+            while parent[x] != x:
+                x = parent[x]
+            return x
+
+        for a, b in edges:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)  # a root is its set's min
+        return {(n, find(n)) for n in list(parent)}
+
+    return components
 
 
 @pytest.fixture(scope="session")

@@ -1,7 +1,7 @@
 """Bench artifact parseability (VERDICT r11 ask #1).
 
 The driver records a FIXED-SIZE TAIL of bench stdout (~2215 chars
-observed in BENCH_r11.json) and parses a JSON line out of it; r11's
+observed in round 11) and parses a JSON line out of it; r11's
 single detailed line outgrew the window and the round's suite totals
 became machine-unreadable (``"parsed": null``).  bench.py now prints a
 compact totals-only line LAST — these tests pipe the exact two-line
@@ -20,8 +20,8 @@ import os
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# The raw capture window: BENCH_r11.json's "tail" field held 2215 chars
-# of payload.  Simulate slightly tighter to keep margin honest.
+# The raw capture window: round 11's recorded "tail" field held 2215
+# chars of payload.  Simulate slightly tighter to keep margin honest.
 TAIL_WINDOW = 2048
 
 
@@ -282,97 +282,3 @@ def test_codegen_scan_catches_janino_fallbacks():
     # each marker fires independently (reformatted log layouts)
     assert scan_codegen_errors("x InternalCompilerException y")
     assert scan_codegen_errors("... grows beyond 64 KB ...")
-
-
-def test_artifact_stamp_and_staleness_classification():
-    """VERDICT r15 ask #7: rehearsal artifacts carry a commit stamp and
-    the verify gate classifies them mechanically — current (code diff vs
-    HEAD empty), stale (code changed since, or produced on a dirty code
-    tree, or unresolvable commit).  Pins the pieces: the code-path
-    filter, the live-repo stamp, and the unknown-sha fallback."""
-    import os
-    import sys
-
-    sys.path.insert(
-        0,
-        os.path.join(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__))), "tools"),
-    )
-    from _stamp import _code_only, artifact_stamp, code_diff_vs_head
-
-    # code-path filter: docs/artifacts never count, code always does
-    assert _code_only(
-        ["VERDICT.md", "SCALE_r16.json", "PLANS.md", "notes/x.md"]
-    ) == []
-    assert _code_only(
-        ["meerkat_abacus_spark/datapipe/similarity.py", "bench.py",
-         "tools/verify_all.py", "tests/test_coding.py", "BENCH_r16.json"]
-    ) == [
-        "bench.py",
-        "meerkat_abacus_spark/datapipe/similarity.py",
-        "tests/test_coding.py",
-        "tools/verify_all.py",
-    ]
-    # prefix discipline: "toolsmith.py" is not under "tools/"
-    assert _code_only(["toolsmith.py", "benchmark.py"]) == []
-
-    # per-artifact relevance (r16): a narrowed prefix set ignores code
-    # that cannot feed the artifact's numbers
-    narrowed = ("meerkat_abacus_spark", "tools/scale_rehearsal.py")
-    assert _code_only(
-        ["tools/ann_scale_rehearsal.py", "tools/scale_rehearsal.py",
-         "meerkat_abacus_spark/datapipe/dedup.py", "tests/test_coding.py"],
-        narrowed,
-    ) == [
-        "meerkat_abacus_spark/datapipe/dedup.py",
-        "tools/scale_rehearsal.py",
-    ]
-
-    # live stamp: resolves HEAD, diff-vs-self is empty (current)
-    stamp = artifact_stamp()
-    assert stamp["commit"] and len(stamp["commit"]) == 40
-    assert code_diff_vs_head(stamp["commit"]) == []
-
-    # unknown sha / empty commit: unverifiable, must read as stale
-    assert code_diff_vs_head("0" * 40) is None
-    assert code_diff_vs_head("") is None
-
-
-def test_verify_artifact_stamp_gate_rows():
-    """The verify_all classification over synthetic artifact files:
-    unstamped ⇒ stale, stamped-at-HEAD ⇒ current, missing ⇒ reported but
-    not stale (the pre-rehearsal verify pass runs before they exist)."""
-    import importlib.util
-    import json
-    import os
-    import sys
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(root, "tools"))
-    spec = importlib.util.spec_from_file_location(
-        "verify_all", os.path.join(root, "tools", "verify_all.py")
-    )
-    va = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(va)
-
-    n = va.current_round()
-    assert n >= 16  # this repo carries CORRECTNESS_r01..r{n-1}
-
-    out = va.run_artifact_stamps()
-    assert out["round"] == n
-    # every classified artifact is exactly one of current/stale/missing
-    names = {
-        f"SCALE_r{n:02d}.json",
-        f"SCALE_ANN_r{n:02d}.json",
-        f"STREAM_SCALE_r{n:02d}.json",
-    }
-    classified = set(out["artifacts"]) | set(out["missing"])
-    assert classified == names
-    for fname, row in out["artifacts"].items():
-        is_stale = fname in out["stale"]
-        current = (
-            row.get("commit")
-            and row.get("code_diff_vs_head") == []
-            and not row.get("dirty_code_paths")
-        )
-        assert bool(current) != is_stale

@@ -373,14 +373,14 @@ def test_explode_deviceids(spark):
 
 def test_connected_components_transitive(spark):
     """A—B—C chains and disjoint pairs resolve to min-id components."""
-    from meerkat_abacus_spark.datapipe.dedup import connected_components
+    from meerkat_abacus_spark.datapipe.dedup import connected_components_star
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (5, 3)], ["id_a", "id_b"]
     )
     comps = {
         r["node"]: r["component"]
-        for r in connected_components(edges).collect()
+        for r in connected_components_star(edges).collect()
     }
     assert comps == {1: 1, 2: 1, 3: 1, 5: 1, 10: 10, 11: 10}
 
@@ -391,7 +391,7 @@ def test_connected_components_reliable_checkpoint(spark, tmp_path):
     loss — the cluster-scale path is a config flip, not a code edit."""
     import os
 
-    from meerkat_abacus_spark.datapipe.dedup import connected_components
+    from meerkat_abacus_spark.datapipe.dedup import connected_components_star
 
     ckpt = str(tmp_path / "ckpt")
     edges = spark.createDataFrame(
@@ -399,7 +399,9 @@ def test_connected_components_reliable_checkpoint(spark, tmp_path):
     )
     comps = {
         r["node"]: r["component"]
-        for r in connected_components(edges, checkpoint_dir=ckpt).collect()
+        for r in connected_components_star(
+            edges, checkpoint_dir=ckpt
+        ).collect()
     }
     assert comps == {1: 1, 2: 1, 3: 1, 5: 1, 10: 10, 11: 10}
     # checkpoint files actually landed in the requested directory
@@ -735,7 +737,7 @@ def test_datapipe_operators_accept_empty_input(spark):
     assert dd.minhash_lsh_candidates(docs).count() == 0
     assert dd.exact_dedup(docs, "doc_id", "text").count() == 0
     assert dd.simhash_wide_pairs(docs).count() == 0
-    assert dd.connected_components(
+    assert dd.connected_components_star(
         spark.createDataFrame([], schema="id_a long, id_b long")
     ).count() == 0
     assert sim.brute_force_topk(embs, embs).count() == 0
@@ -744,16 +746,14 @@ def test_datapipe_operators_accept_empty_input(spark):
     assert q.count() == 0
 
 
-def test_star_contraction_matches_label_propagation(spark):
-    """Alternating large/small-star must produce the identical
-    (node → min reachable id) labelling as label propagation on graphs
-    with long chains, cliques, isolated edges and merged clusters."""
+def test_star_contraction_matches_label_propagation(spark, min_id_components):
+    """Alternating large/small-star must produce the (node → min reachable
+    id) labelling that label propagation converges to, checked against a
+    pure-Python union-find on graphs with long chains, cliques, isolated
+    edges and merged clusters."""
     import random
 
-    from meerkat_abacus_spark.datapipe.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    from meerkat_abacus_spark.datapipe.dedup import connected_components_star
 
     rng = random.Random(7)
     edges = []
@@ -764,52 +764,11 @@ def test_star_contraction_matches_label_propagation(spark):
     edges = [(min(a, b), max(a, b)) for a, b in edges if a != b]
     df = spark.createDataFrame(edges, schema="id_a long, id_b long")
 
-    # label propagation needs O(diameter) passes on the 40-node path —
-    # give it enough; star contraction converges in O(log n) on defaults
-    # (that gap is exactly why star is the high-diameter-safe choice).
-    lab = {
-        (r.node, r.component)
-        for r in connected_components(df, max_iterations=60).collect()
-    }
     star = {
         (r.node, r.component)
         for r in connected_components_star(df).collect()
     }
-    assert star == lab
-
-
-def test_label_propagation_raises_on_non_convergence(spark):
-    """VERDICT r12 'what's wrong' #2: connected_components (one-hop label
-    propagation) must FAIL CLOSED when max_iterations is exhausted —
-    incomplete labels flow straight into keep-best dedup, which would
-    silently delete the wrong documents.  strict=False keeps the old
-    warn-and-return for callers who opt in to partial labels."""
-    import pytest
-
-    from meerkat_abacus_spark.datapipe.dedup import connected_components
-
-    path = spark.createDataFrame(
-        [(i, i + 1) for i in range(100, 140)], schema="id_a long, id_b long"
-    )
-    # 40-node path, 3 iterations: cannot converge -> raise by default
-    with pytest.raises(RuntimeError, match="connected_components_star"):
-        connected_components(path, max_iterations=3).collect()
-    # explicit opt-out: warn and return the partial labels
-    with pytest.warns(RuntimeWarning, match="max_iterations"):
-        partial = connected_components(
-            path, max_iterations=3, strict=False
-        ).collect()
-    assert len(partial) == 41  # every node labelled, labels partial
-    # a converged run is silent and unaffected by strict
-    import warnings
-
-    with warnings.catch_warnings():
-        warnings.simplefilter("error", RuntimeWarning)
-        got = {
-            (r.node, r.component)
-            for r in connected_components(path, max_iterations=60).collect()
-        }
-    assert got == {(i, 100) for i in range(100, 141)}
+    assert star == min_id_components(edges)
 
 
 def test_star_contraction_raises_on_non_convergence(spark):
@@ -817,9 +776,8 @@ def test_star_contraction_raises_on_non_convergence(spark):
     CLOSED when max_iterations is exhausted before the star-forest fixed
     point — the leaf/root projection would otherwise emit duplicate or
     non-minimal labels that keep-best survivor selection acts on,
-    deleting the wrong documents.  Same strict=True default as the
-    one-hop variant; strict=False keeps the warn-and-return for callers
-    who opt in to partial labels."""
+    deleting the wrong documents.  strict=False keeps the warn-and-return
+    for callers who opt in to partial labels."""
     import warnings
 
     import pytest
@@ -861,8 +819,7 @@ def test_star_contraction_empty_and_single_edge(spark):
 def test_star_contraction_stats_hook(spark):
     """The profiling hook (VERDICT r11 ask #4) must report iterations and
     per-round wall/edges without changing the labelling, and a
-    deep-path graph must converge in O(log n) rounds — the property the
-    SCALE rehearsal's cc_profile leg publishes."""
+    deep-path graph must converge in O(log n) rounds."""
     import math
 
     from meerkat_abacus_spark.datapipe.dedup import connected_components_star

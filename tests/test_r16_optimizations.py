@@ -218,22 +218,6 @@ def test_derive_stream_partitions_scales_with_bytes(spark, tmp_path):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
-def test_derive_stream_partitions_env_override(spark, tmp_path, monkeypatch):
-    src = tmp_path / "src2"
-    src.mkdir()
-    _write_bytes(str(src / "a.json"), 10)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "16")
-        monkeypatch.setenv("MSA_STREAM_SHUFFLE_PARTITIONS", "5")
-        assert derive_stream_partitions(spark, str(src)) == 5
-        # override clamps to the session cap too
-        monkeypatch.setenv("MSA_STREAM_SHUFFLE_PARTITIONS", "4096")
-        assert derive_stream_partitions(spark, str(src)) == 16
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
 def test_stream_shuffle_partitions_restores_conf(spark, tmp_path):
     src = tmp_path / "src3"
     src.mkdir()

@@ -8,36 +8,31 @@ import pytest
 from pyspark.sql import functions as F
 
 
-def _graph(spark):
+def _edges():
     import random
 
     rng = random.Random(11)
     edges = [(i, i + 1) for i in range(100, 120)]
     edges += [(a, b) for a in range(200, 206) for b in range(a + 1, 206)]
     edges += [(rng.randrange(0, 50), rng.randrange(0, 50)) for _ in range(40)]
-    edges = [(min(a, b), max(a, b)) for a, b in edges if a != b]
-    return spark.createDataFrame(edges, schema="id_a long, id_b long")
+    return [(min(a, b), max(a, b)) for a, b in edges if a != b]
 
 
-def test_star_roots_skip_antijoin_at_fixed_point(spark):
+def _graph(spark):
+    return spark.createDataFrame(_edges(), schema="id_a long, id_b long")
+
+
+def test_star_roots_skip_antijoin_at_fixed_point(spark, min_id_components):
     """r17: once the convergence probe has verified chained == 0 (no node
     is both an edge's small end and another's big end), every distinct v
     IS a root, so the root projection's left-anti join is provably the
-    identity and is dropped.  Pin (a) the labels still equal label
-    propagation's and (b) the converged plan carries no LeftAnti."""
-    from meerkat_abacus_spark.datapipe.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    identity and is dropped.  Pin (a) the labels still equal a union-find
+    reference's and (b) the converged plan carries no LeftAnti."""
+    from meerkat_abacus_spark.datapipe.dedup import connected_components_star
 
-    df = _graph(spark)
-    lab = {
-        (r.node, r.component)
-        for r in connected_components(df, max_iterations=60).collect()
-    }
-    comps = connected_components_star(df)
+    comps = connected_components_star(_graph(spark))
     star = {(r.node, r.component) for r in comps.collect()}
-    assert star == lab
+    assert star == min_id_components(_edges())
     plan = comps._jdf.queryExecution().executedPlan().toString()
     assert "LeftAnti" not in plan, plan
     # the strict=False partial-labels path keeps the anti-join (a

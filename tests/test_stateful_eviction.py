@@ -1,7 +1,7 @@
 """Event-time state eviction for the stateful sessionizer.
 
-STREAM_SCALE_r05.json measures the NoTimeout footprint (state rows ==
-every user ever seen); these tests prove the ``evict=True`` mode actually
+Without a timeout the sessionizer's state holds one row per user ever
+seen; these tests prove the ``evict=True`` mode actually
 bounds it: once the watermark passes ``last_event + gap``, the user's
 state row is removed — without changing the emitted sessions.
 """

@@ -93,7 +93,6 @@ INTERESTING = (
     "incremental_ann_equals_batch",
     # r9 additions
     "dedup_span_removal",
-    "ann_lsh_dpp",
     "incremental_lsh_equals_batch",
     # r13 additions
     "dedup_embedding_lsh",

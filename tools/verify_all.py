@@ -1,30 +1,24 @@
-"""One-shot evidence harness (r4 verdict #8): full-registry oracle compare
-+ pytest + every scale rehearsal, collapsed into one JSON artifact.
+"""One-shot evidence harness: full-registry oracle compare + pytest + an
+ANSI driver simulation + the README count check, collapsed into one JSON
+report.
 
 Runs, in order:
 
-1. ``tools/compare.py`` over the ENTIRE registry at sf0.01 (the driver's
-   correctness gate only snapshots the first 50 entries; this closes the
-   gap for the rest),
+1. ``tools/compare.py`` over the ENTIRE registry at sf0.01,
 2. ``pytest tests/ -q``,
 3. an ANSI driver simulation: every registered query executed at sf0.001
-   on a session with ``spark.sql.ansi.enabled=true`` — the round driver
-   owns its SparkSession and Spark 4 defaults ANSI ON, so this catches
+   on a session with ``spark.sql.ansi.enabled=true`` — a caller that owns
+   its SparkSession gets Spark 4's default ANSI ON, so this catches
    ANSI-unsafe expressions our own session factory would mask,
-4. an artifact-provenance check (VERDICT r15 ask #7): the current
-   round's committed SCALE/SCALE_ANN/STREAM_SCALE artifacts must be
-   stamped (tools/_stamp.py) with a commit whose diff vs HEAD is
-   doc/artifact-only, else the gate fails,
-5. the three scale rehearsals (dedup+pipeline, ANN incl. index build,
-   streaming state) unless ``--skip-rehearsals``.
+4. ``tools/gen_readme_counts.py``: the README's generated counts must
+   match the registry.
 
 Usage::
 
-    python tools/verify_all.py [--out VERIFY_rNN.json] [--skip-rehearsals]
+    python tools/verify_all.py [--out REPORT.json]
 
-Exit status is non-zero if any compare line failed or pytest failed, so the
-tool doubles as a CI gate.  Rehearsal JSONs are embedded verbatim in the
-summary (and stay available as separate committed artifacts).
+Exit status is non-zero if any leg failed, so the tool doubles as a CI
+gate.
 """
 
 from __future__ import annotations
@@ -191,119 +185,18 @@ def run_readme_counts() -> dict:
     }
 
 
-def current_round() -> int:
-    """The round being built = one past the newest driver correctness
-    artifact (the driver writes CORRECTNESS_r{N}.json at round end)."""
-    rounds = [
-        int(m.group(1))
-        for f in os.listdir(REPO)
-        for m in [re.match(r"CORRECTNESS_r(\d+)\.json$", f)]
-        if m
-    ]
-    return (max(rounds) + 1) if rounds else 1
-
-
-def run_artifact_stamps() -> dict:
-    """VERDICT r15 ask #7: the current round's committed rehearsal
-    artifacts must carry a commit stamp whose diff against HEAD is
-    doc/artifact-only — a number produced on code that later changed is
-    STALE and fails the gate (regenerate it, or finish the code first).
-    Artifacts not yet produced this round are reported but don't fail:
-    the pre-rehearsal verify pass runs before they exist; the FINAL
-    verify of the round must see all three present and current."""
-    from _stamp import _code_only, code_diff_vs_head
-
-    n = current_round()
-    out: dict = {"round": n, "artifacts": {}, "stale": [], "missing": []}
-    # Per-artifact relevance: an artifact is stale only when code that
-    # can feed ITS numbers changed — the package, or its own harness.
-    # (A gate amendment in the ANN harness must not force a dedup
-    # rehearsal rerun.)
-    relevant = {
-        f"SCALE_r{n:02d}.json": (
-            "meerkat_abacus_spark", "tools/scale_rehearsal.py",
-        ),
-        f"SCALE_ANN_r{n:02d}.json": (
-            "meerkat_abacus_spark", "tools/ann_scale_rehearsal.py",
-        ),
-        f"STREAM_SCALE_r{n:02d}.json": (
-            "meerkat_abacus_spark", "tools/stream_scale_rehearsal.py",
-        ),
-    }
-    for fname in relevant:
-        fpath = os.path.join(REPO, fname)
-        if not os.path.exists(fpath):
-            out["missing"].append(fname)
-            continue
-        try:
-            with open(fpath) as fh:
-                stamp = json.load(fh).get("artifact_commit")
-        except (OSError, json.JSONDecodeError):
-            stamp = None
-        if not stamp or not stamp.get("commit"):
-            out["artifacts"][fname] = {"commit": None}
-            out["stale"].append(fname)  # unstamped = unverifiable
-            continue
-        diff = code_diff_vs_head(stamp["commit"], relevant[fname])
-        row = {
-            "commit": stamp["commit"],
-            "dirty_code_paths": _code_only(
-                stamp.get("dirty_code_paths", []), relevant[fname]
-            ),
-            "code_diff_vs_head": diff,
-        }
-        out["artifacts"][fname] = row
-        if diff is None or diff or row["dirty_code_paths"]:
-            out["stale"].append(fname)
-    return out
-
-
-def run_rehearsal(script: str) -> dict | None:
-    proc = subprocess.run(
-        [sys.executable, f"tools/{script}"],
-        cwd=REPO, capture_output=True, text=True, timeout=3600,
-    )
-    for line in reversed(proc.stdout.strip().splitlines()):
-        line = line.strip()
-        if line.startswith("{"):
-            try:
-                return json.loads(line)
-            except json.JSONDecodeError:
-                continue
-    return None
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--out", default=None, help="also write the JSON here")
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
-    ap.add_argument("--skip-rehearsals", action="store_true")
     args = ap.parse_args()
-
-    # Round-start automation (VERDICT r8 ask #3): fold any newer driver
-    # artifacts into the rotation snapshot before anything imports the
-    # queries package, so the registry ordering and the staleness
-    # invariants are evaluated against fresh certification data.
-    sys.path.insert(0, os.path.join(REPO, "tools"))
-    from gen_rotation import regenerate_if_stale
-
-    if regenerate_if_stale():
-        print("regenerated runtime rotation snapshot from newer driver artifacts",
-              file=sys.stderr)
 
     report: dict = {
         "compare": run_compare(args.sf_dir),
         "pytest": run_pytest(),
         "ansi_sim": run_ansi_sim(),
         "readme_counts": run_readme_counts(),
-        "artifact_stamps": run_artifact_stamps(),
     }
-    if not args.skip_rehearsals:
-        report["rehearsals"] = {
-            "dedup_and_pipeline_10x": run_rehearsal("scale_rehearsal.py"),
-            "ann_100x": run_rehearsal("ann_scale_rehearsal.py"),
-            "stream_state_10x_users": run_rehearsal("stream_scale_rehearsal.py"),
-        }
     ok = (
         not report["compare"]["failures"]
         and not report["compare"]["missing"]
@@ -311,7 +204,6 @@ def main() -> int:
         and not report["ansi_sim"]["failures"]
         and not report["ansi_sim"]["codegen_errors"]
         and not report["readme_counts"]["drifted"]
-        and not report["artifact_stamps"]["stale"]
     )
     report["green"] = ok
     line = json.dumps(report)

@@ -218,15 +218,17 @@ def publish_alerts(
 
     ``silent`` mirrors the country config's ``messaging_silent``
     (util/__init__.py:587): the pipeline runs end-to-end but nothing leaves
-    the cluster — the count still reflects what WOULD have been sent."""
+    the cluster — the count still reflects what WOULD have been sent.  With
+    nothing to send (``silent`` or no ``send``) the count is a plain JVM
+    ``count()``: no Python worker starts."""
+    if silent or send is None:
+        return df.count()
     acc = df.sparkSession.sparkContext.accumulator(0)
-    do_send = None if silent else send
 
     def _partition(rows) -> None:
         n = 0
         for row in rows:
-            if do_send is not None:
-                do_send(row.asDict())
+            send(row.asDict())
             n += 1
         acc.add(n)
 

@@ -2,16 +2,35 @@
 
 The reference's delete+insert idempotency (K2, write_to_db.py:40-49) is the
 moral equivalent of ``MERGE INTO ... WHEN MATCHED DELETE/INSERT`` keyed on
-(uuid, type).  Without a Delta/Iceberg runtime in this container, upsert is
-implemented as a partition-pruned read → anti-join → staged write → dynamic
-partition overwrite: only the partitions touched by the incoming batch (or
-holding an older version of an incoming key) are read and rewritten.  On a
-lakehouse table format the same function body becomes a single ``MERGE
-INTO`` statement.
+(uuid, type).  Without a Delta/Iceberg runtime in this container,
+``upsert_by_key`` is a staged copy-on-write of the affected partitions:
+
+1. the incoming batch is written once to ``<path>.staging/incoming``, so its
+   upstream plan (a stream micro-batch's QC and coding) runs once and every
+   later step reads those files;
+2. the partitions it touches, or that hold an older version of one of its
+   keys, are merged with it and written once, already partitioned, to
+   ``<path>.staging/merged``;
+3. an intent record, ``<path>.staging/_swap.json``, lists every affected
+   partition, then each target partition directory is deleted and its
+   staged leaf renamed into place (or only deleted, when every row moved
+   away), and the staging directory is deleted last.
+
+A crash anywhere leaves either no intent record (the table is untouched;
+the next call discards the staging directory) or an intent record whose
+remaining swaps the next call on that path finishes before doing anything
+else.  Either way replaying the batch converges to the crash-free result.
+
+What a concurrent reader sees: there is no snapshot isolation.  During a
+swap a reader may list some partitions already swapped and others not yet,
+and a partition can be missing between its delete and its rename.  The
+reference's delete+insert ran in one Postgres transaction; on a lakehouse
+table format the same function body becomes a single atomic ``MERGE INTO``.
 """
 
 from __future__ import annotations
 
+import json
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -104,14 +123,118 @@ def _affected_by_semi_join(
     return existing.join(F.broadcast(parts_df), cond, "left_semi")
 
 
+# Name of the swap intent record inside the staging directory.
+_INTENT = "_swap.json"
+
+
+def _under(base: str, spec: str) -> str:
+    """``base`` joined with a relative partition spec ("" is ``base`` itself)."""
+    return base + "/" + spec if spec else base
+
+
+def _staged_specs(spark: SparkSession, fs, merged: str, partition_by) -> list[str]:
+    """Relative partition specs (``type=case/epi_year=2024``) of the leaves
+    Spark wrote under ``merged``, named as Spark named them: one glob,
+    joined to one string in the JVM, so the listing costs a handful of
+    gateway calls whatever the partition count (py4j cannot pass a
+    ``Path[]`` to an ``Object[]`` parameter, hence Scala's generic array
+    wrapper).  Spark escapes control characters in directory names, so a
+    newline cannot occur inside one."""
+    jvm = spark._jvm
+    pattern = merged + "".join(
+        f"/{_escape_partition_value(c)}=*" for c in partition_by
+    )
+    statuses = fs.globStatus(jvm.org.apache.hadoop.fs.Path(pattern))
+    if statuses is None:
+        return []
+    listed = jvm.scala.Predef.genericWrapArray(
+        jvm.org.apache.hadoop.fs.FileUtil.stat2Paths(statuses)
+    ).mkString("\n")
+    depth = len(partition_by)
+    return sorted(
+        "/".join(p.split("/")[-depth:]) for p in listed.split("\n") if p
+    )
+
+
+def _write_intent(spark: SparkSession, fs, staging: str, replace, delete) -> None:
+    """Swap step 1: persist the partition specs about to be swapped
+    (``replace``: a staged leaf takes the target's place; ``delete``: the
+    target goes away).  Written to a temporary name, then renamed, so a
+    reader never sees half a record."""
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    tmp = Path(f"{staging}/{_INTENT}.tmp")
+    out = fs.create(tmp, True)
+    try:
+        out.write(json.dumps({"replace": replace, "delete": delete}).encode())
+    finally:
+        out.close()
+    if not fs.rename(tmp, Path(f"{staging}/{_INTENT}")):
+        raise OSError(f"could not publish the swap intent under {staging}")
+
+
+def _swap_partition(fs, Path, root: str, staging: str, spec: str, staged: bool) -> None:
+    """Swap step 2 for one partition: delete the target directory and, when
+    the merge left rows for it, rename the staged leaf into its place."""
+    target = Path(_under(root, spec))
+    fs.delete(target, True)
+    if staged and not fs.rename(Path(_under(staging + "/merged", spec)), target):
+        raise OSError(f"could not move staged partition {spec!r} into {root}")
+
+
+def _clear_staging(fs, Path, staging: str) -> None:
+    """Swap step 3 (and the discard of an unswapped staging directory)."""
+    fs.delete(Path(staging), True)
+
+
+def _swap(spark: SparkSession, fs, root: str, staging: str, replace, delete) -> None:
+    """Swap steps 2-3 for every partition the intent record lists."""
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    # A new partition's parent directory (``type=x`` of ``type=x/epi_year=y``)
+    # may not exist yet; renames need it.
+    for parent in sorted({s.rpartition("/")[0] for s in replace if "/" in s}):
+        fs.mkdirs(Path(f"{root}/{parent}"))
+    for spec in replace:
+        _swap_partition(fs, Path, root, staging, spec, True)
+    for spec in delete:
+        _swap_partition(fs, Path, root, staging, spec, False)
+    _clear_staging(fs, Path, staging)
+
+
+def _roll_forward(spark: SparkSession, fs, root: str, staging: str) -> None:
+    """Finish or discard what an interrupted upsert left in ``staging``.
+
+    With an intent record, the swaps it lists are finished: a ``replace``
+    spec whose staged leaf is still there has not been renamed yet, one
+    whose leaf is gone already has; ``delete`` specs are idempotent.
+    Without one, the table was never touched and the staging directory is
+    discarded."""
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    if not fs.exists(Path(staging)):
+        return
+    intent = Path(f"{staging}/{_INTENT}")
+    if not fs.exists(intent):
+        _clear_staging(fs, Path, staging)
+        return
+    stream = fs.open(intent)
+    try:
+        record = json.loads(
+            spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        )
+    finally:
+        stream.close()
+    pending = [
+        s for s in record["replace"]
+        if fs.exists(Path(_under(staging + "/merged", s)))
+    ]
+    _swap(spark, fs, root, staging, pending, record["delete"])
+
+
 def upsert_by_key(
     spark: SparkSession,
     df: DataFrame,
     path: str,
     keys: list[str],
     partition_by: list[str] | None = None,
-    staging_dir: str | None = None,
-    detect_partition_moves: bool = True,
     partition_literal_limit: int = 128,
 ):
     """K2 — idempotent delete+insert keyed on ``keys`` (uuid, type).
@@ -125,61 +248,72 @@ def upsert_by_key(
 
     Scale contract with ``partition_by`` set (e.g. ``["type", "epi_year"]``):
 
-    - the rewrite set is the union of the batch's own partitions and (when
-      ``detect_partition_moves``) the partitions currently holding any
-      incoming key.  The move lookup is a column-pruned scan of just
-      ``keys + partition_by`` semi-joined against the broadcast batch keys
-      — parquet reads only those columns, and at 100 TB a lakehouse MERGE
-      (Delta/Iceberg) replaces this whole function; set
-      ``detect_partition_moves=False`` only when partition columns are
-      provably stable under reprocessing;
-    - the merged survivors are written to a STAGING directory first, then
-      dynamic-partition-overwritten into the target from the staged files.
-      The overwrite's lineage therefore reads staged data, never the path
-      being overwritten, and a mid-write failure leaves the previous table
-      plus a re-creatable staging dir — no ``localCheckpoint`` (executor
-      memory) in the recovery path;
-    - a partition whose every row moved away produces no staged output, so
-      dynamic overwrite cannot touch it; such partitions are deleted
-      explicitly through the Hadoop FileSystem client.
+    - ``df`` is evaluated once: it is written unpartitioned to
+      ``<path>.staging/incoming`` (unpartitioned keeps its exact column
+      types) and every later step reads those files;
+    - the rewrite set is the union of the batch's own partitions and the
+      partitions currently holding any incoming key, collected in one job.
+      The second half is a column-pruned scan of ``keys + partition_by``
+      semi-joined against the broadcast staged keys, so moves are always
+      detected.  Up to ``partition_literal_limit`` partitions prune the
+      existing-side scan with a NULL-safe literal OR-chain; above it, with
+      the broadcast semi-join of ``_affected_by_semi_join``;
+    - survivors are the affected rows left-anti-joined against the
+      broadcast staged keys; survivors plus the batch are written once,
+      partitioned, to ``<path>.staging/merged``.  Up to the literal limit
+      the write is rebalanced on ``partition_by``: one file per rewritten
+      partition at batch sizes, and AQE may split a skewed one.  Above it
+      (a backfill), each task writes its own rows without a shuffle, since
+      AQE would coalesce thousands of small partitions into one task that
+      writes every file in turn;
+    - the staged leaves replace their target directories by rename under
+      an intent record (module docstring): one delete and one rename per
+      partition, a delete alone for a partition whose every row moved
+      away.  Untouched partitions keep their files.
 
-    Without ``partition_by`` this degrades to a full-table staged merge —
-    test-only.
+    Without ``partition_by`` the whole table is the one rewritten
+    directory — test-sized tables only.
     """
-    fs, target = _hadoop_fs(spark, path)
-    first_writer = df.write.mode("overwrite")
-    if partition_by:
-        first_writer = first_writer.partitionBy(*partition_by)
+    root = path.rstrip("/")
+    staging = root + ".staging"
+    fs, target = _hadoop_fs(spark, root)
+    _roll_forward(spark, fs, root, staging)
     if not fs.exists(target):
         # Existence probed via the FileSystem client, NOT a read wrapped in
         # a blanket except: a corrupt footer / permission blip on a
         # populated table must surface, never silently trigger a first
         # write (round-2 verdict, "What's wrong" #1).
-        first_writer.parquet(path)
+        writer = df.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(path)
         return
     existing = spark.read.parquet(path)
 
-    staging = staging_dir or (path.rstrip("/") + ".staging")
-    incoming_keys = df.select(*keys).distinct()
+    incoming = staging + "/incoming"
+    df.write.parquet(incoming)
+    batch = spark.read.schema(df.schema).parquet(incoming)
+    batch_keys = F.broadcast(batch.select(*keys))
+    merged_dir = staging + "/merged"
 
     if partition_by:
         # The affected-partition set is small (bounded by the batch, not
         # the table) — collecting it to the driver is what makes the
         # existing-side scan partition-pruned.
+        holding = (
+            existing.select(*keys, *partition_by)
+            .join(batch_keys, on=keys, how="left_semi")
+            .select(*partition_by)
+        )
         part_tuples = {
-            tuple(row[c] for c in partition_by)
-            for row in df.select(*partition_by).distinct().collect()
+            tuple(r)
+            for r in batch.select(*partition_by)
+            .unionByName(holding)
+            .distinct()
+            .collect()
         }
-        if detect_partition_moves:
-            moved = (
-                existing.select(*keys, *partition_by)
-                .join(F.broadcast(incoming_keys), on=keys, how="left_semi")
-                .select(*partition_by)
-                .distinct()
-                .collect()
-            )
-            part_tuples |= {tuple(r[c] for c in partition_by) for r in moved}
         if not part_tuples:
+            _clear_staging(fs, spark._jvm.org.apache.hadoop.fs.Path, staging)
             return  # empty batch
         if len(part_tuples) <= partition_literal_limit:
             # Literal OR-chain: statically prunes the existing-side scan at
@@ -203,48 +337,34 @@ def upsert_by_key(
         else:
             affected = _affected_by_semi_join(
                 spark, existing, part_tuples, partition_by,
-                df.select(*partition_by).schema,
+                batch.select(*partition_by).schema,
             )
-        survivors = affected.join(incoming_keys, on=keys, how="left_anti")
-        merged = survivors.unionByName(df, allowMissingColumns=True)
-        # Staging is written UNPARTITIONED so the read-back keeps the exact
-        # column types (hive-style partition dirs would re-infer them, e.g.
-        # string "007" -> int 7); the target write re-partitions from the
-        # data columns, which is a per-task fan-out, not a shuffle.
-        merged.write.mode("overwrite").parquet(staging)
-        staged = spark.read.parquet(staging)
-        (
-            staged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*partition_by)
-            .parquet(path)
+        survivors = affected.join(batch_keys, on=keys, how="left_anti")
+        merged = survivors.unionByName(batch, allowMissingColumns=True)
+        if len(part_tuples) <= partition_literal_limit:
+            merged = merged.hint("rebalance", *partition_by)
+        merged.write.partitionBy(*partition_by).parquet(merged_dir)
+        replace = _staged_specs(spark, fs, merged_dir, partition_by)
+        # A partition whose every row moved away has no staged leaf.
+        delete = sorted(
+            {
+                "/".join(
+                    f"{c}={_escape_partition_value(v)}"
+                    for c, v in zip(partition_by, values)
+                )
+                for values in part_tuples
+            }
+            - set(replace)
         )
-        # Partitions that lost ALL rows (every key moved out): no staged
-        # output exists for them, so delete their directories explicitly.
-        staged_parts = {
-            tuple(r[c] for c in partition_by)
-            for r in staged.select(*partition_by).distinct().collect()
-        }
-        for values in sorted(
-            part_tuples - staged_parts,
-            key=lambda t: tuple("" if v is None else str(v) for v in t),
-        ):
-            segs = "/".join(
-                f"{c}={_escape_partition_value(v)}"
-                for c, v in zip(partition_by, values)
-            )
-            _, gone = _hadoop_fs(spark, path.rstrip("/") + "/" + segs)
-            fs.delete(gone, True)
-        fs.delete(_hadoop_fs(spark, staging)[1], True)
-        return
+    else:
+        survivors = existing.join(batch_keys, on=keys, how="left_anti")
+        survivors.unionByName(batch, allowMissingColumns=True).write.parquet(
+            merged_dir
+        )
+        replace, delete = [""], []
 
-    # Unpartitioned fallback: whole-table staged merge.  Fine for fixtures
-    # and unit tests; at scale ALWAYS pass partition_by.
-    survivors = existing.join(incoming_keys, on=keys, how="left_anti")
-    merged = survivors.unionByName(df, allowMissingColumns=True)
-    merged.write.mode("overwrite").parquet(staging)
-    spark.read.parquet(staging).write.mode("overwrite").parquet(path)
-    fs.delete(_hadoop_fs(spark, staging)[1], True)
+    _write_intent(spark, fs, staging, replace, delete)
+    _swap(spark, fs, root, staging, replace, delete)
 
 
 def dead_letter_split(

@@ -8,6 +8,7 @@ through the identical pipeline; late/duplicate data is handled by the
 import json
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from meerkat_abacus_spark.sinks.writers import upsert_by_key
@@ -216,8 +217,8 @@ def test_upsert_partition_move_deletes_stale(spark, tmp_path):
 
 def test_upsert_partition_move_empties_partition(spark, tmp_path):
     """When every row of a partition moves away, the partition directory
-    itself must disappear (dynamic overwrite cannot express an empty
-    partition, so the sink deletes it through the FileSystem client)."""
+    itself must disappear (the merge stages no leaf for it, so the swap
+    only deletes it)."""
     import os
 
     path = str(tmp_path / "data_table")
@@ -400,3 +401,142 @@ def test_upsert_join_fallback_null_partition_value(spark, tmp_path):
         for r in spark.read.parquet(path).collect()
     }
     assert got == {("u1", None): 2, ("u2", "A"): 1}
+
+
+def test_upsert_writes_each_rewritten_partition_once(spark, tmp_path):
+    """One staged write per batch: every rewritten partition ends up as one
+    parquet file, the staging directory is gone, and a two-partition batch
+    with a partition move costs a bounded number of Spark jobs (the
+    two-write shape with a separate move lookup ran 15)."""
+    import os
+
+    path = str(tmp_path / "data_table")
+    cols = ["uuid", "type", "epi_year", "version"]
+    base = spark.createDataFrame(
+        [(f"u{i}", "case", 2023 + i % 2, 1) for i in range(40)], cols
+    ).repartition(4)
+    upsert_by_key(spark, base, path, keys=["uuid", "type"],
+                  partition_by=["type", "epi_year"])
+    # u1 moves 2024 -> 2023; u2 is corrected in place in 2024
+    batch = spark.createDataFrame(
+        [("u1", "case", 2023, 2), ("u2", "case", 2024, 2)], cols
+    )
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    job0 = int(dag.nextJobId())
+    upsert_by_key(spark, batch, path, keys=["uuid", "type"],
+                  partition_by=["type", "epi_year"])
+    assert int(dag.nextJobId()) - job0 <= 10
+
+    for part in ("type=case/epi_year=2023", "type=case/epi_year=2024"):
+        files = [f for f in os.listdir(os.path.join(path, part))
+                 if f.endswith(".parquet")]
+        assert len(files) == 1, (part, files)
+    assert not os.path.exists(path + ".staging")
+    got = {(r["uuid"], r["epi_year"]): r["version"]
+           for r in spark.read.parquet(path).collect()}
+    assert len(got) == 40
+    assert got[("u1", 2023)] == 2 and got[("u2", 2024)] == 2
+
+
+# Where the crash-point matrix interrupts an upsert.  The batch below swaps
+# four partitions: 2023 (in-place fix, new key, incoming move), 2024
+# (emptied: its one row moves to 2023), 2025 (loses a row to 2026) and
+# 2026 (new).
+_CRASH_POINTS = [
+    "after_merged_write",
+    "after_intent",
+    "after_1_of_4_swaps",
+    "after_3_of_4_swaps",
+    "between_delete_and_rename",
+    "before_staging_delete",
+]
+
+
+@pytest.mark.parametrize("point", _CRASH_POINTS)
+def test_upsert_crash_then_replay_converges(spark, tmp_path, monkeypatch, point):
+    """A crash at any step of the staged swap, then a replay of the same
+    batch, gives exactly the rows of a crash-free run with unique
+    (uuid, type) keys: the next call rolls a recorded swap forward, or
+    discards staging that has no intent record (the reference's
+    delete+insert was one transaction, write_to_db.py:40-49)."""
+    import os
+
+    from meerkat_abacus_spark.sinks import writers as w
+
+    cols = "uuid string, type string, epi_year int, version int"
+    base = spark.createDataFrame(
+        [("u1", "case", 2023, 1), ("u2", "case", 2023, 1),
+         ("u3", "case", 2024, 1), ("u4", "case", 2025, 1),
+         ("u5", "case", 2025, 1), ("v1", "visit", 2023, 1)],
+        cols,
+    )
+    batch = spark.createDataFrame(
+        [("u1", "case", 2023, 2), ("u3", "case", 2023, 2),
+         ("u4", "case", 2026, 2), ("u9", "case", 2023, 2)],
+        cols,
+    )
+    parts = ["type", "epi_year"]
+
+    def upsert(path, df):
+        upsert_by_key(spark, df, path, keys=["uuid", "type"], partition_by=parts)
+
+    def rows(path):
+        got = [r.asDict() for r in spark.read.parquet(path).collect()]
+        by_key = {(r["uuid"], r["type"]): r for r in got}
+        assert len(by_key) == len(got), "duplicate (uuid, type) keys"
+        return by_key
+
+    clean = str(tmp_path / "clean")
+    upsert(clean, base)
+    upsert(clean, batch)
+    want = rows(clean)
+    assert {k: (r["epi_year"], r["version"]) for k, r in want.items()} == {
+        ("u1", "case"): (2023, 2), ("u2", "case"): (2023, 1),
+        ("u3", "case"): (2023, 2), ("u4", "case"): (2026, 2),
+        ("u5", "case"): (2025, 1), ("u9", "case"): (2023, 2),
+        ("v1", "visit"): (2023, 1),
+    }
+
+    class Crash(Exception):
+        pass
+
+    calls = []
+
+    def write_intent(*args):
+        if point == "after_intent":
+            real_write_intent(*args)
+        raise Crash(point)
+
+    def swap_partition(fs, Path, root, staging, spec, staged):
+        calls.append(spec)
+        if point == "between_delete_and_rename" and len(calls) == 2:
+            fs.delete(Path(root + "/" + spec), True)
+            raise Crash(point)
+        done = {"after_1_of_4_swaps": 1, "after_3_of_4_swaps": 3}.get(point)
+        if done is not None and len(calls) > done:
+            raise Crash(point)
+        real_swap_partition(fs, Path, root, staging, spec, staged)
+
+    def clear_staging(*args):
+        raise Crash(point)
+
+    real_write_intent = w._write_intent
+    real_swap_partition = w._swap_partition
+    if point.startswith("after_merged") or point == "after_intent":
+        monkeypatch.setattr(w, "_write_intent", write_intent)
+    elif point == "before_staging_delete":
+        monkeypatch.setattr(w, "_clear_staging", clear_staging)
+    else:
+        monkeypatch.setattr(w, "_swap_partition", swap_partition)
+
+    path = str(tmp_path / "crashed")
+    upsert(path, base)
+    with pytest.raises(Crash):
+        upsert(path, batch)
+    assert os.path.isdir(path + ".staging")
+    monkeypatch.undo()
+
+    upsert(path, batch)  # the replay
+    assert rows(path) == want
+    assert not os.path.exists(path + ".staging")
+    assert not os.path.isdir(os.path.join(path, "type=case/epi_year=2024"))

@@ -241,6 +241,21 @@ def test_recent_alerts_and_silent_mode(spark):
     assert publish_alerts(recent, send=None, silent=True) == 2
 
 
+def test_silent_publish_never_calls_send(spark):
+    # messaging_silent (util/__init__.py:587) with a real sender configured:
+    # the count is right and the sender is never called, so one that fails
+    # cannot fail the publish.
+    from meerkat_abacus_spark.operators.send_alerts import publish_alerts
+
+    def send(_row):
+        raise RuntimeError("send must not be called in silent mode")
+
+    alerts = spark.createDataFrame(
+        [(f"a{i}",) for i in range(5)], ["alert_id"]
+    ).repartition(3)
+    assert publish_alerts(alerts, send=send, silent=True) == 5
+
+
 def test_bucketed_join_has_no_exchange(spark):
     # Scale design: pre-bucketing both sides of a recurring join key
     # (spark.write.bucketBy) co-locates matching rows at WRITE time, so the

@@ -56,12 +56,6 @@ def shingles_from_tokens(toks: Column, k: int = 3) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def shingles_col(text: Column, k: int = 3) -> Column:
-    """Convenience single-expression shingling; for hot paths materialize the
-    tokens first and use :func:`shingles_from_tokens`."""
-    return shingles_from_tokens(tokens_col(text), k)
-
-
 def shingle_hash(shingle: Column) -> Column:
     """Portable 60-bit integer hash of one shingle: the first 15 hex chars
     of ``md5(shingle)`` parsed base-16.  One md5 per shingle is the ONLY

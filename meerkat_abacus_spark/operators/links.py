@@ -12,9 +12,7 @@ row.  Key normalizations (add_links.py:65-83, 113-129):
 
 All three are plain equi-joins after key derivation, so Catalyst picks
 broadcast-hash vs sort-merge; the collect_list aggregation shuffles on the
-base uuid once per link def.  At scale: the to-side is usually the smaller
-(linked forms are a fraction of case volume) — pass ``broadcast_to_side`` to
-pin a broadcast-hash join and avoid shuffling the fact table at all.
+base uuid once per link def.
 """
 
 from __future__ import annotations
@@ -79,7 +77,6 @@ def add_links(
     to_forms: dict[str, DataFrame],
     links: list[LinkDef],
     alert_id_len: int = 6,
-    broadcast_to_side: bool = False,
     payload_columns: dict[str, list[str]] | None = None,
     collect: str = "array",
 ) -> DataFrame:
@@ -197,7 +194,6 @@ def add_links(
             grouped = keyed.groupBy(*group_keys).agg(
                 F.array_sort(F.collect_list("__linked")).alias("__arr")
             )
-        to_side = F.broadcast(grouped) if broadcast_to_side else grouped
 
         conds: list[Column] = []
         for i, (fc, m) in enumerate(zip(from_cols, methods)):
@@ -215,13 +211,13 @@ def add_links(
                 # is identical to the string-normalized form (injective
                 # cast), the shuffle/join key is 8 fixed bytes, and NULLs
                 # already fail equi-joins so no blank guard is needed.
-                conds.append(qcol(fc) == to_side[f"__k{i}"])
+                conds.append(qcol(fc) == grouped[f"__k{i}"])
                 continue
             else:
                 base_key = _normalize(qcol(fc), m)
             # Blank base keys never match (NULLs fail equi-joins); mirrors
             # the reference's from-side `!= ''` guard (add_links.py:69).
-            conds.append(F.nullif(base_key, F.lit("")) == to_side[f"__k{i}"])
+            conds.append(F.nullif(base_key, F.lit("")) == grouped[f"__k{i}"])
         cond = conds[0]
         for c in conds[1:]:
             cond = cond & c
@@ -233,7 +229,7 @@ def add_links(
                     f"link_{link.name} array; use collect='array'"
                 )
             out = (
-                out.join(to_side, cond, "left")
+                out.join(grouped, cond, "left")
                 .withColumn(f"link_{link.name}_first", F.col("__first"))
                 .withColumn(f"link_{link.name}_last", F.col("__last"))
                 .withColumn(
@@ -253,7 +249,7 @@ def add_links(
         prior_col = f"link_{link.name}" if f"link_{link.name}" in out.columns else None
         if prior_col is not None:
             out = out.withColumnRenamed(prior_col, "__prior")
-        joined = out.join(to_side, cond, "left")
+        joined = out.join(grouped, cond, "left")
         fresh = F.coalesce(F.col("__arr"), empty)
         if prior_col is not None:
             arr = F.array_sort(

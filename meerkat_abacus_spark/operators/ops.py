@@ -1,49 +1,20 @@
-"""Ops mirroring: step monitoring + dead-letter capture (reference ops tables).
+"""Ops mirroring: dead-letter capture (reference step_failures table).
 
-Reference: step_monitoring (model.py:87-94, one row per step per chunk —
-process_steps/__init__.py:39-57) and step_failures (model.py:47-54, per-record
-error capture — pipeline.py:91-109).
+Reference: step_failures (model.py:47-54, per-record error capture —
+pipeline.py:91-109).  Its sibling ops table, step_monitoring
+(model.py:87-94), is mirrored by ``plans.monitoring.StepMonitor``.
 
 Spark disposition: per-record try/except disappears (plans either compile or
-don't); what remains meaningful is (a) per-step wall-clock/row-count capture
-around *actions*, and (b) a dead-letter DataFrame for rows failing semantic
-validation.  Deep metrics (shuffle bytes, spill) belong to the Spark UI /
-SparkListener — this mirror covers the reference's analytical surface.
+don't); what remains meaningful is a dead-letter DataFrame for rows failing
+semantic validation.  Deep metrics (shuffle bytes, spill) belong to the
+Spark UI / SparkListener — this mirror covers the reference's analytical
+surface.
 """
 
 from __future__ import annotations
 
-import time
-from dataclasses import dataclass, field
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-@dataclass
-class StepMonitor:
-    """Collects (step, n, start, end, duration) rows like step_monitoring."""
-
-    records: list[tuple] = field(default_factory=list)
-
-    def timed(self, step: str, df: DataFrame) -> DataFrame:
-        """Run a count action around ``df`` and record the timing.
-
-        Use at stage boundaries you would persist anyway — forcing extra
-        actions per step is the reference's row-at-a-time habit, not a cost
-        to pay on every transform.
-        """
-        start = time.time()
-        n = df.count()
-        end = time.time()
-        self.records.append((step, n, start, end, end - start))
-        return df
-
-    def to_df(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame(
-            self.records or [("", 0, 0.0, 0.0, 0.0)],
-            "step string, n bigint, start double, end double, duration double",
-        ).filter(F.col("step") != "")
 
 
 def make_step_failures(

@@ -19,14 +19,6 @@ from meerkat_abacus_spark.functions.dates import timestamp_of
 from meerkat_abacus_spark.operators.coding import Rule, compile_rule_test
 
 
-def fractional_sample(df: DataFrame, fraction: float, seed: int = 42) -> DataFrame:
-    """F1 — keep each row with probability ``fraction``
-    (quality_control.py:106-110, config.py:74)."""
-    if fraction >= 1.0:
-        return df
-    return df.sample(fraction=fraction, seed=seed)
-
-
 def submission_date_filter(
     df: DataFrame, submission_col: str, only_import_after: str
 ) -> DataFrame:

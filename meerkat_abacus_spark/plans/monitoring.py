@@ -26,9 +26,7 @@ is ``available_at_s`` — seconds from monitor creation until that step's
 metrics became available (i.e. the driving action completed it) — plus the
 fleet-wide ``elapsed_total_s``; neither is labeled as a per-step duration
 (the reference's per-step duration column has no fused-plan equivalent,
-and mislabeling a shared constant as one would misrepresent parity — use
-``operators.ops.StepMonitor`` when genuine per-step action timing is
-worth forcing an action per step).
+and mislabeling a shared constant as one would misrepresent parity).
 """
 
 from __future__ import annotations

@@ -9,8 +9,10 @@ moral equivalent of ``MERGE INTO ... WHEN MATCHED DELETE/INSERT`` keyed on
    upstream plan (a stream micro-batch's QC and coding) runs once and every
    later step reads those files;
 2. the partitions it touches, or that hold an older version of one of its
-   keys, are merged with it and written once, already partitioned, to
-   ``<path>.staging/merged``;
+   keys, are read through one static partition predicate, merged with it
+   and written once, one file per partition, to ``<path>.staging/merged``
+   (one code path whether a corrections batch touches three partitions or
+   a backfill touches thousands);
 3. an intent record, ``<path>.staging/_swap.json``, lists every affected
    partition, then each target partition directory is deleted and its
    staged leaf renamed into place (or only deleted, when every row moved
@@ -31,9 +33,8 @@ table format the same function body becomes a single atomic ``MERGE INTO``.
 from __future__ import annotations
 
 import json
-from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -89,38 +90,25 @@ def _escape_partition_value(value) -> str:
     return "".join(out)
 
 
-def _affected_by_semi_join(
-    spark: SparkSession,
-    existing: DataFrame,
-    part_tuples,
-    partition_by: list[str],
-    parts_schema,
-) -> DataFrame:
-    """Backfill-sized partition sets (r7 verdict ask #6): thousands of
-    OR'd literal conjunctions degrade Catalyst analysis superlinearly.
-    Above ``partition_literal_limit``, broadcast-semi-join the affected
-    partition tuples onto the existing side instead — bounded analysis
-    cost, and the join condition stays null-safe like the literal chain
-    (left_semi equality would silently drop null partition values).
+def _partition_in(partition_by, schema, part_tuples) -> Column:
+    """``struct(*partition_by) IN (...)`` over ``part_tuples`` (string
+    renderings, None for NULL), each value cast back to its column's type in
+    ``schema``.  Built as one SQL expression: one gateway call at any
+    partition count, where a Column literal per value costs several.  Each
+    value travels as UTF-8 hex, so no character needs SQL escaping."""
 
-    Module-level so the fallback test can assert WHICH path ran by
-    monkeypatch-recording this call (ADVICE r8 #5: the previous
-    wall-clock bound flaked under CI load and proved nothing about the
-    branch taken)."""
-    parts_df = spark.createDataFrame(
-        sorted(
-            part_tuples,
-            key=lambda t: tuple(
-                ("", "") if v is None else ("v", str(v)) for v in t
-            ),
-        ),
-        schema=parts_schema,
+    def literal(value, sql_type):
+        if value is None:
+            return f"CAST(NULL AS {sql_type})"
+        return f"CAST(CAST(X'{value.encode().hex()}' AS STRING) AS {sql_type})"
+
+    types = [schema[c].dataType.simpleString() for c in partition_by]
+    structs = ", ".join(
+        "struct(" + ", ".join(map(literal, values, types)) + ")"
+        for values in part_tuples
     )
-    cond = reduce(
-        lambda a, b: a & b,
-        [existing[c].eqNullSafe(parts_df[c]) for c in partition_by],
-    )
-    return existing.join(F.broadcast(parts_df), cond, "left_semi")
+    columns = ", ".join("`" + c.replace("`", "``") + "`" for c in partition_by)
+    return F.expr(f"struct({columns}) IN ({structs})")
 
 
 # Name of the swap intent record inside the staging directory.
@@ -235,7 +223,6 @@ def upsert_by_key(
     path: str,
     keys: list[str],
     partition_by: list[str] | None = None,
-    partition_literal_limit: int = 128,
 ):
     """K2 — idempotent delete+insert keyed on ``keys`` (uuid, type).
 
@@ -255,17 +242,20 @@ def upsert_by_key(
       partitions currently holding any incoming key, collected in one job.
       The second half is a column-pruned scan of ``keys + partition_by``
       semi-joined against the broadcast staged keys, so moves are always
-      detected.  Up to ``partition_literal_limit`` partitions prune the
-      existing-side scan with a NULL-safe literal OR-chain; above it, with
-      the broadcast semi-join of ``_affected_by_semi_join``;
+      detected;
+    - the existing side is read through one static partition predicate,
+      ``struct(*partition_by) IN (<typed literal structs>)``: Catalyst
+      folds it to one ``InSet`` that the file index evaluates once per
+      partition, so only the rewrite set is read, at any partition count.
+      Struct equality compares each field NULL-safely, so a NULL partition
+      value matches its ``__HIVE_DEFAULT_PARTITION__`` directory;
     - survivors are the affected rows left-anti-joined against the
-      broadcast staged keys; survivors plus the batch are written once,
-      partitioned, to ``<path>.staging/merged``.  Up to the literal limit
-      the write is rebalanced on ``partition_by``: one file per rewritten
-      partition at batch sizes, and AQE may split a skewed one.  Above it
-      (a backfill), each task writes its own rows without a shuffle, since
-      AQE would coalesce thousands of small partitions into one task that
-      writes every file in turn;
+      broadcast staged keys; survivors plus the batch are hash-partitioned
+      on ``partition_by`` into ``min(rewritten partitions,
+      defaultParallelism)`` tasks (an explicit count, which AQE does not
+      coalesce) and written once, partitioned, to ``<path>.staging/merged``.
+      Every rewritten partition is one file; the price is that a skewed
+      partition is never split, so one task writes all of its rows;
     - the staged leaves replace their target directories by rename under
       an intent record (module docstring): one delete and one rename per
       partition, a delete alone for a partition whose every row moved
@@ -305,44 +295,26 @@ def upsert_by_key(
             .join(batch_keys, on=keys, how="left_semi")
             .select(*partition_by)
         )
+        # Each value as Spark renders it in a directory name (None for NULL).
         part_tuples = {
             tuple(r)
             for r in batch.select(*partition_by)
             .unionByName(holding)
+            .select(*[F.col(c).cast("string") for c in partition_by])
             .distinct()
             .collect()
         }
         if not part_tuples:
             _clear_staging(fs, spark._jvm.org.apache.hadoop.fs.Path, staging)
             return  # empty batch
-        if len(part_tuples) <= partition_literal_limit:
-            # Literal OR-chain: statically prunes the existing-side scan at
-            # the file index, the cheapest possible shape for the common
-            # batch-bounded partition set.
-            part_cond = reduce(
-                lambda a, b: a | b,
-                [
-                    reduce(
-                        lambda a, b: a & b,
-                        [
-                            F.col(c).eqNullSafe(F.lit(v))
-                            for c, v in zip(partition_by, values)
-                        ],
-                    )
-                    for values in part_tuples
-                ],
-                F.lit(False),
-            )
-            affected = existing.filter(part_cond)
-        else:
-            affected = _affected_by_semi_join(
-                spark, existing, part_tuples, partition_by,
-                batch.select(*partition_by).schema,
-            )
+        affected = existing.filter(
+            _partition_in(partition_by, existing.schema, part_tuples)
+        )
         survivors = affected.join(batch_keys, on=keys, how="left_anti")
-        merged = survivors.unionByName(batch, allowMissingColumns=True)
-        if len(part_tuples) <= partition_literal_limit:
-            merged = merged.hint("rebalance", *partition_by)
+        merged = survivors.unionByName(batch, allowMissingColumns=True).repartition(
+            min(len(part_tuples), spark.sparkContext.defaultParallelism),
+            *partition_by,
+        )
         merged.write.partitionBy(*partition_by).parquet(merged_dir)
         replace = _staged_specs(spark, fs, merged_dir, partition_by)
         # A partition whose every row moved away has no staged leaf.

@@ -7,17 +7,8 @@ scanning history.
 
 from pyspark.sql import functions as F
 
-from meerkat_abacus_spark.operators.ops import StepMonitor, make_step_failures
+from meerkat_abacus_spark.operators.ops import make_step_failures
 from meerkat_abacus_spark.sinks.writers import dead_letter_split
-
-
-def test_step_monitor(spark):
-    mon = StepMonitor()
-    df = spark.range(100)
-    mon.timed("quality_control", df)
-    mon.timed("to_codes", df.filter(F.col("id") < 50))
-    rows = {r["step"]: r["n"] for r in mon.to_df(spark).collect()}
-    assert rows == {"quality_control": 100, "to_codes": 50}
 
 
 def test_dead_letter_and_step_failures(spark):

@@ -330,77 +330,91 @@ def test_streaming_threshold_alerts_equals_batch(spark, tmp_path):
     assert got == expected and got == {(1, 4): ["e0", "e1", "e2", "e3"]}
 
 
-def test_upsert_many_partitions_uses_join_fallback(spark, tmp_path, monkeypatch):
-    """Backfill shape (r7 verdict ask #6): ~5 000 affected partitions must
-    not build a 5 000-term literal OR-chain (Catalyst analysis degrades
-    superlinearly) — above partition_literal_limit the affected-partition
-    filter becomes a broadcast semi-join, and the merge still replaces
-    exactly the incoming keys.  The branch taken is asserted by recording
-    the fallback call (ADVICE r8 #5: a wall-clock bound flakes under CI
-    load and proves nothing about which path ran)."""
-    from meerkat_abacus_spark.sinks import writers as w
+def _merged_write_plan(spark) -> str:
+    """Physical plan text of the last SQL execution that wrote an upsert's
+    staged merge, read from the session's SQL status store."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = [
+        executions.apply(i).physicalPlanDescription()
+        for i in range(executions.size())
+    ]
+    return [p for p in plans if ".staging/merged" in p][-1]
+
+
+@pytest.mark.parametrize("affected", [3, 5000])
+def test_upsert_prunes_existing_scan_to_affected_partitions(spark, tmp_path, affected):
+    """One upsert path at any partition count (a corrections batch and a
+    backfill alike): the existing-side scan is pruned by a static partition
+    predicate, so only the affected partitions are read; each rewritten
+    partition is one file; exactly the incoming keys are replaced and the
+    untouched partitions keep their files."""
+    import os
+    import re
 
     path = str(tmp_path / "wide_table")
-    n = 5000
+    n = affected + 5  # five partitions the batch leaves alone
+    cols = ["uuid", "type", "pkey", "version"]
     base = spark.createDataFrame(
-        [(f"u{i}", "case", i, 1) for i in range(n)],
-        ["uuid", "type", "pkey", "version"],
+        [(f"u{i}", "case", i, 1) for i in range(n)], cols
     ).repartition(8)
-    upsert_by_key(
-        spark, base, path, keys=["uuid", "type"], partition_by=["pkey"]
-    )
+    upsert_by_key(spark, base, path, keys=["uuid", "type"], partition_by=["pkey"])
 
+    def files(i):
+        return sorted(f for f in os.listdir(os.path.join(path, f"pkey={i}"))
+                      if f.endswith(".parquet"))
+
+    untouched = {i: files(i) for i in range(affected, n)}
     batch = spark.createDataFrame(
-        [(f"u{i}", "case", i, 2) for i in range(n)],
-        ["uuid", "type", "pkey", "version"],
+        [(f"u{i}", "case", i, 2) for i in range(affected)], cols
     ).repartition(8)
-    calls = []
-    real = w._affected_by_semi_join
+    upsert_by_key(spark, batch, path, keys=["uuid", "type"], partition_by=["pkey"])
 
-    def recording(*args, **kwargs):
-        out = real(*args, **kwargs)
-        calls.append(out)
-        return out
-
-    monkeypatch.setattr(w, "_affected_by_semi_join", recording)
-    upsert_by_key(
-        spark, batch, path, keys=["uuid", "type"], partition_by=["pkey"]
+    plan = _merged_write_plan(spark)
+    table_scans = re.findall(
+        r"Location: InMemoryFileIndex \[[^\]]*/wide_table\]\n"
+        r"PartitionFilters: \[(.*)\]",
+        plan,
     )
-    assert len(calls) == 1, "semi-join fallback branch was not taken"
-    # and the fallback's plan really is a broadcast semi-join
-    plan = calls[0]._jdf.queryExecution().executedPlan().toString()
-    assert "LeftSemi" in plan and "Broadcast" in plan, plan
+    assert table_scans, plan[:3000]
+    for filters in table_scans:
+        assert filters and "dynamicpruning" not in filters, filters[:300]
 
-    got = spark.read.parquet(path)
-    assert got.count() == n
-    assert got.filter(F.col("version") != 2).count() == 0
+    for i in range(affected):
+        assert len(files(i)) == 1, (i, files(i))
+    assert {i: files(i) for i in range(affected, n)} == untouched
+    got = {r["uuid"]: r["version"] for r in spark.read.parquet(path).collect()}
+    assert got == {f"u{i}": 2 if i < affected else 1 for i in range(n)}
 
 
-def test_upsert_join_fallback_null_partition_value(spark, tmp_path):
-    """The semi-join fallback must keep the literal chain's NULL-safe
-    semantics: a null partition value in the batch still matches its
-    existing partition."""
+def test_upsert_partition_values_match_null_safely(spark, tmp_path):
+    """A NULL partition value in the batch matches its existing
+    ``__HIVE_DEFAULT_PARTITION__`` directory, and a string value that Spark
+    escapes in directory names (``'``, ``/``, ``=``, ``%``) matches its own:
+    both partitions are read, so their rows outside the batch survive the
+    rewrite."""
     path = str(tmp_path / "null_part")
+    odd = "a'b/c=d%e"
+    schema = "uuid string, type string, pkey string, version int"
     base = spark.createDataFrame(
-        [("u1", "case", None, 1), ("u2", "case", "A", 1)],
-        "uuid string, type string, pkey string, version int",
+        [("u1", "case", None, 1), ("u2", "case", "A", 1),
+         ("u3", "case", odd, 1), ("u4", "case", odd, 1),
+         ("u5", "case", None, 1)],
+        schema,
     )
-    upsert_by_key(
-        spark, base, path, keys=["uuid", "type"], partition_by=["pkey"]
-    )
+    upsert_by_key(spark, base, path, keys=["uuid", "type"], partition_by=["pkey"])
     batch = spark.createDataFrame(
-        [("u1", "case", None, 2)],
-        "uuid string, type string, pkey string, version int",
+        [("u1", "case", None, 2), ("u3", "case", odd, 2)], schema
     )
-    upsert_by_key(
-        spark, batch, path, keys=["uuid", "type"], partition_by=["pkey"],
-        partition_literal_limit=0,  # force the join path
-    )
+    upsert_by_key(spark, batch, path, keys=["uuid", "type"], partition_by=["pkey"])
     got = {
         (r["uuid"], r["pkey"]): r["version"]
         for r in spark.read.parquet(path).collect()
     }
-    assert got == {("u1", None): 2, ("u2", "A"): 1}
+    assert got == {
+        ("u1", None): 2, ("u2", "A"): 1, ("u3", odd): 2, ("u4", odd): 1,
+        ("u5", None): 1,
+    }
 
 
 def test_upsert_writes_each_rewritten_partition_once(spark, tmp_path):
